@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
 
@@ -10,6 +10,35 @@ object Bench {
     * registered scale path is dedup_embedding_blocked.)
     */
   val baselineOnly: Set[String] = Set("dedup_embedding")
+
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One timed pass: per query the min over its runs and the max−min
+    * spread, in seconds. A query that throws in ANY run is `failed`
+    * (name → first error) and has no time: a failure must never enter a
+    * total as if it were a fast success.
+    */
+  final case class Pass(
+      min: Map[String, Double], spread: Map[String, Double],
+      failed: Map[String, Throwable])
+
+  def timePass(spark: SparkSession, sfDir: String, queries: Map[String, Query],
+      reps: Int, gcBetween: Boolean = false): Pass = {
+    val runs = queries.map { case (name, fn) =>
+      if (gcBetween) System.gc()
+      name -> Seq.fill(math.max(1, reps)) {
+        val t0 = System.nanoTime()
+        try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable => Left(e) }
+      }
+    }
+    val failed = runs.collect { case (n, rs) if rs.exists(_.isLeft) =>
+      n -> rs.collectFirst { case Left(e) => e }.get }
+    val ok = runs.filter { case (n, _) => !failed.contains(n) }
+      .map { case (n, rs) => n -> rs.collect { case Right(t) => t } }
+    Pass(ok.map { case (n, ts) => n -> ts.min }, ok.map { case (n, ts) => n -> (ts.max - ts.min) },
+      failed)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -32,13 +61,9 @@ object Bench {
     // number is the steady state — reporting both keeps round-over-
     // round comparison honest (the headline stays warm; SCALE.md says
     // so).
-    val cold: Map[String, Double] =
-      if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") == "0") Map.empty
-      else SparkEntry.queries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
+    val cold =
+      if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") == "0") Pass(Map.empty, Map.empty, Map.empty)
+      else timePass(spark, sfDir, SparkEntry.queries, reps = 1)
     // min of three timed runs, with a GC breather per query: in a
     // 60+-query JVM a query's number otherwise reflects its NEIGHBORS
     // (garbage debt + cache churn from whatever ran before it — the
@@ -47,16 +72,13 @@ object Bench {
     // steady-state cost; the max-min spread is recorded so future
     // rounds can tell drift from noise.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
-      System.gc()
-      val runs = Seq.fill(math.max(1, reps))(once())
-      name -> (runs.min, runs.max - runs.min)
+    val warm = timePass(spark, sfDir, SparkEntry.queries, reps, gcBetween = true)
+    // a query failing in either pass is reported as failed, timed in neither
+    val failed = cold.failed ++ warm.failed
+    failed.toSeq.sortBy(_._1).foreach { case (n, e) =>
+      System.err.println(s"bench: query $n FAILED: $e")
     }
+    val results = warm.min.filter { case (k, _) => !failed.contains(k) }
     val (foil, scaleSafe) = results.partition { case (k, _) => baselineOnly(k) }
     // Locale.ROOT: the default-locale formatter writes "0,1234" under
     // comma-decimal locales — invalid JSON, which would break the
@@ -65,18 +87,20 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
     def jsonMap(m: Map[String, Double]): String =
       m.map { case (k, v) => s"\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
-    val qs = jsonMap(scaleSafe.map { case (k, (v, _)) => k -> v })
-    val spread = jsonMap(results.map { case (k, (_, s)) => k -> s })
-    val foils = jsonMap(foil.map { case (k, (v, _)) => k -> v })
-    val colds = jsonMap(cold)
-    val total = if (scaleSafe.nonEmpty) scaleSafe.values.map(_._1).sum else 0.0
-    val totalAll = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
+    val qs = jsonMap(scaleSafe)
+    val spread = jsonMap(warm.spread.filter { case (k, _) => results.contains(k) })
+    val foils = jsonMap(foil)
+    val colds = jsonMap(cold.min.filter { case (k, _) => !failed.contains(k) })
+    val failedList = failed.keys.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val total = scaleSafe.values.sum
+    val totalAll = results.values.sum
     // Keyed "detail", NOT "metric": the driver tail-parses the last
     // {"metric":...} line, which must be the compact summary below.
     // "queries" is the WARM (min-of-reps) headline; "cold" is the timed
-    // warmup pass, carrying any one-time costs (persist, index build).
+    // warmup pass, carrying any one-time costs (persist, index build);
+    // "failed" names the queries that threw (in no map, in no total).
     val detail =
-      s"""{"detail":"per-query","total":$total,"unit":"sec","n":${scaleSafe.size},"queries":$qs,"cold":$colds,"baseline_only":$foils,"spread":$spread,"sf":"$sfDir"}"""
+      s"""{"detail":"per-query","total":$total,"unit":"sec","n":${scaleSafe.size},"queries":$qs,"cold":$colds,"baseline_only":$foils,"spread":$spread,"failed":$failedList,"sf":"$sfDir"}"""
     // Full per-query detail: one stdout line (may be long) AND a file,
     // so the numbers survive even when a log capture truncates stdout.
     println(detail)
@@ -91,8 +115,9 @@ object Bench {
     // this compact summary must stay small and must be printed LAST
     // (round 4's single giant line lost its head — and with it the
     // "value" total — to tail truncation; BENCH_r04.json came back
-    // parsed:null). Headline total excludes baseline-only foils.
+    // parsed:null). Headline total excludes baseline-only foils and
+    // failed queries.
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","n":${scaleSafe.size},"total_with_baseline_only":$totalAll,"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","n":${scaleSafe.size},"failed":${failed.size},"total_with_baseline_only":$totalAll,"sf":"$sfDir"}""")
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.scd.{MergeEmulator, ScdApply, ScdConfig}
+import graft.scd.{ScdApply, ScdConfig}
 
 /** THE documented scale path for SCD maintenance (the one backend —
   * an earlier `BucketedScdTable` that solved only the rewrite half via
@@ -25,12 +25,17 @@ import graft.scd.{MergeEmulator, ScdApply, ScdConfig}
   *    travel, history, and atomic swap-in of the touched slice's next
   *    state without ever overwriting the files the merge read).
   *
-  * A batch: hash the incoming business keys to buckets → read ONLY the
-  * touched buckets' files (straight from the manifest, no directory
-  * listing) → run the standard SCD merge over that slice → stage the
-  * slice's next state per bucket → one atomic commit that swaps the
-  * touched buckets' files and carries every other file reference
-  * forward. Readers time-travel across batches at file granularity.
+  * A batch: stamp the source once and cast it to the table's column
+  * types ([[graft.scd.ScdApply.stamp]]) → hash the table-typed business
+  * keys to buckets (one job) → read ONLY the touched buckets' files
+  * (straight from the manifest, no directory listing) → run the SCD
+  * kernel ([[graft.scd.ScdApply.merge]]) over that slice: ONE exchange
+  * by bucket into one partition per touched bucket, then one per-key
+  * pass that reproduces the split and both reference merges, no join →
+  * write the slice's next state to `_tmp` → allocate identity → stage
+  * it per bucket → one atomic commit that swaps the touched buckets'
+  * files and carries every other file reference forward. Readers
+  * time-travel across batches at file granularity.
   *
   * Identity columns (the test DDL's `GENERATED ALWAYS AS IDENTITY`,
   * test_scd_handler.py:41) are supported the way Delta does it: the
@@ -73,6 +78,7 @@ final class IncrementalScdTable(
     val out = fs.create(schemaFile, true)
     out.write(schema.json.getBytes(StandardCharsets.UTF_8))
     out.close()
+    schemaCache = Some(schema)
     identityCol.foreach { c =>
       // the name is interpolated into the config JSON — the same
       // structural-character rule the manifest meta enforces
@@ -117,10 +123,16 @@ final class IncrementalScdTable(
         v
     }
 
-  private def storedSchema: StructType = {
+  // written once by create() — every batch reads it (the stamp's cast
+  // target), so parse it once
+  @volatile private var schemaCache: Option[StructType] = None
+
+  private def storedSchema: StructType = schemaCache.getOrElse {
     val in = fs.open(schemaFile)
     val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    DataType.fromJson(txt).asInstanceOf[StructType]
+    val st = DataType.fromJson(txt).asInstanceOf[StructType]
+    schemaCache = Some(st)
+    st
   }
 
   private def emptyFrame(schema: StructType): DataFrame =
@@ -153,27 +165,28 @@ final class IncrementalScdTable(
     * versions yet — an empty batch must not commit a zero-file v0).
     */
   def applyScd(source: DataFrame, cfg: ScdConfig): Long = {
-    // ONE job decides both emptiness and the touched set (a separate
-    // isEmpty probe would re-scan the source — per-batch fixed costs
-    // are the incremental path's whole overhead at small batches)
-    val touched: Seq[Int] = source.select(bucketOf(cfg.pkCols).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.isEmpty)
-      return table.latestVersion.getOrElse(-1L)
-
     // pin the read version: the commit below removes exactly the files
     // this merge READ, and carries it as readVersion so a racing
     // deletion-vector commit conflicts loudly instead of being
     // resurrected by the restaged slice
     val baseV = table.latestVersion
+    // stamp once, cast to the table's types: the touched buckets are
+    // hashed from the TABLE-typed key — the hash rows are stored under
+    // (a BIGINT source key hashes differently from the INT column it
+    // lands in)
+    val stamped = ScdApply.stamp(source, storedSchema, cfg)
+    // ONE job decides both emptiness and the touched set (a separate
+    // isEmpty probe would re-scan the source — per-batch fixed costs
+    // are the incremental path's whole overhead at small batches)
+    val touched: Seq[Int] = stamped.rows.select(bucketOf(cfg.pkCols).as("b"))
+      .distinct().collect().map(_.getInt(0)).toSeq.sorted
+    if (touched.isEmpty)
+      return baseV.getOrElse(-1L)
+
     val snapPrefixes = touched.map(b => bucketDir(b) + "/").toSet
     val snap = baseV
       .flatMap(v => table.snapshotOfFiles(v, f => snapPrefixes.exists(f.startsWith)))
       .getOrElse(emptyFrame(storedSchema))
-    val delta = ScdApply.split(snap, source, cfg)
-    val close = MergeEmulator.merge(snap, delta.inactiveUpdates, cfg.pkCols)
-    val upsert = MergeEmulator.merge(
-      close.next, delta.activeUnion, cfg.pkCols, isActiveData = true)
     // identity: fill NULL surrogate keys from the manifest watermark —
     // untouched buckets' ids are ≤ the watermark by induction, so only
     // the old watermark and this slice's new ids matter. Materialize
@@ -193,21 +206,21 @@ final class IncrementalScdTable(
     // splits.
     val idCfg = identityConfig
     val watermark = identityWatermark
-    val merged0 = upsert.next.withColumn("__bucket", bucketOf(cfg.pkCols))
-      // bucket-align the tasks BEFORE materializing: the merge shuffle
-      // leaves every task holding rows of EVERY touched bucket, so the
-      // partitioned write would explode into tasks × buckets files (a
-      // 10M-row initial load staged 20,490 files and the serial publish
-      // renames + per-file stats harvest dominated the build at ~400 s).
-      // One task per touched bucket stages one file per bucket per
-      // batch — what snapshotOfBuckets, compactBuckets(maxFiles) and
-      // the untouched-carryover spec assume. (Identity tables keep the
-      // guarantee through the allocation window's exchange; without an
-      // identity column, a bucket whose scratch file exceeds
-      // maxPartitionBytes can read back split and stage
-      // ceil(bytes/split) files — bounded fragmentation compactBuckets
-      // folds later, never a correctness issue.)
-      .repartition(touched.size, col("__bucket"))
+    // the kernel's one exchange IS the bucket alignment: one task per
+    // touched bucket (modulo hash collisions of bucket ids), so the
+    // partitioned write stages one file per bucket per batch instead of
+    // tasks × buckets files (a 10M-row initial load once staged 20,490
+    // files and the serial publish renames + per-file stats harvest
+    // dominated the build at ~400 s) — what snapshotOfBuckets,
+    // compactBuckets(maxFiles) and the untouched-carryover spec assume.
+    // (Identity tables keep the guarantee through the allocation
+    // window's exchange; without an identity column, a bucket whose
+    // scratch file exceeds maxPartitionBytes can read back split and
+    // stage ceil(bytes/split) files — bounded fragmentation
+    // compactBuckets folds later, never a correctness issue.)
+    val merged0 = ScdApply
+      .merge(snap, stamped, cfg, Some((bucketOf(cfg.pkCols), touched.size)))
+      .withColumn("__bucket", bucketOf(cfg.pkCols))
     val tmpDir = new Path(path,
       s"_tmp/slice-${java.util.UUID.randomUUID().toString.take(8)}")
     try {
@@ -312,6 +325,10 @@ final class IncrementalScdTable(
         var result = -1L
         var committed = false
         while (!committed) {
+          // the check and the commit must see the SAME version: a racer
+          // landing between them would otherwise be rebased over with
+          // ids allocated from the counter it already advanced
+          val checked = table.latestVersion
           val newest = identityWatermark
           if (newest > watermark)
             throw new CommitConflictException(
@@ -321,7 +338,8 @@ final class IncrementalScdTable(
           try {
             result = table.commitFiles(added, removed, op, maxRetries = 0,
               meta = cdcMeta + ("id_watermark" -> math.max(newest, mx).toString),
-              schema = dataSchema, readVersion = baseV)
+              schema = dataSchema, readVersion = baseV,
+              requireBase = Some(checked.getOrElse(-1L)))
             committed = true
           } catch {
             // a DV moved under the merge: NOT retryable with this

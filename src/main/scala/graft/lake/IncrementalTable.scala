@@ -1872,8 +1872,8 @@ final class IncrementalTable(
       // rebase over anything — a racer could have invalidated what was
       // checked (e.g. dropTypeWideningDemand's footer sweep). Thrown
       // outside the retry catch: re-validation, not retry, is the cure.
-      requireBase.foreach { rb =>
-        if (base != Some(rb)) throw new CommitConflictException(
+      requireBase.foreach { rb => // -1: the table had no version yet
+        if (base.getOrElse(-1L) != rb) throw new CommitConflictException(
           s"commit of $path validated against version $rb but the table " +
             s"is at ${base.getOrElse(-1L)} — re-validate on fresh state")
       }

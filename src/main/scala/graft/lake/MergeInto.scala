@@ -28,8 +28,11 @@ import org.apache.spark.sql.functions._
   *
   * Condition and set/insert expressions are SQL strings over the two
   * aliases (default `target` / `updates`), exactly like the reference's
-  * string-built dictionaries. Update/insert values are cast to the
-  * target column's type (Delta's implicit cast).
+  * string-built dictionaries. Insert values and conditions resolve
+  * against the updates side alone, as in Delta: an unqualified column
+  * is the source's even where the target has one of the same name.
+  * Update/insert values are cast to the target column's type (Delta's
+  * implicit cast).
   *
   * Physical shape: ONE full-outer join serves both halves — its
   * target-present rows ARE the old left-outer (update/delete) image
@@ -38,7 +41,8 @@ import org.apache.spark.sql.functions._
   * This matters twice at scale: the previous left-outer + left-anti
   * pair referenced the TARGET twice (and the anti join had to shuffle
   * the full target anyway — an anti probe cannot broadcast the big
-  * build side), and when merges NEST (ScdApply runs merge #2 over
+  * build side), and when merges NEST (the `delta_merge` port,
+  * `ScdApply.split` + [[graft.scd.MergeEmulator]], runs merge #2 over
   * merge #1's output) two references per level duplicated the whole
   * upstream subtree per level: the two-batch SCD plan carried 46
   * exchanges / 20 sort-merge-join subtrees before this rewrite,
@@ -104,7 +108,23 @@ final class MergeInto private (
     val tMarker = s"__${targetAlias}_present"
     val t = target.withColumn(tMarker, lit(true)).alias(targetAlias)
     val marker = s"__${updatesAlias}_matched"
-    val u = updates.withColumn(marker, lit(true)).alias(updatesAlias)
+    // insert values and conditions see the SOURCE row only (the
+    // target side of an inserted row does not exist): resolve them
+    // against the updates alias here, before the join, as columns the
+    // projection below reads — an unqualified name the target shares
+    // is the source's, and a target reference fails analysis
+    def insCond(i: Int) = s"__${updatesAlias}_inscond$i"
+    // per insert clause: target column -> the pre-resolved value column
+    val insValues: Seq[Map[String, String]] = insertClauses.zipWithIndex.map {
+      case (cl, i) => cl.values.keys.zipWithIndex
+        .map { case (c, j) => c -> s"__${updatesAlias}_ins${i}_$j" }.toMap
+    }
+    val u0 = updates.withColumn(marker, lit(true)).alias(updatesAlias)
+    val u = u0.select(col("*") +: insertClauses.zip(insValues).zipWithIndex.flatMap {
+      case ((cl, names), i) =>
+        cl.condition.map(c => coalesce(expr(c), lit(false)).as(insCond(i))).toSeq ++
+          cl.values.toSeq.map { case (c, v) => expr(v).as(names(c)) }
+    }: _*).alias(updatesAlias)
 
     // one join serves both halves (see the class doc's physical-shape
     // note): target-present rows = the left-outer image the matched /
@@ -144,7 +164,9 @@ final class MergeInto private (
     val applicable = firstWins(matchedClauses.map(_.condition), matched)
     val bySrcApplicable =
       firstWins(bySourceClauses.map(_.condition), notMatchedBySource)
-    val insApplicable = firstWins(insertClauses.map(_.condition), lit(true))
+    val insApplicable = firstWins(insertClauses.zipWithIndex.map { case (cl, i) =>
+      cl.condition.map(_ => s"`$updatesAlias`.`${insCond(i)}`")
+    }, lit(true))
 
     def deletePred(cls: Seq[MatchedClause], apps: Seq[Column]): Column =
       cls.zip(apps).collect { case (MatchedClause(_, None), app) => app }
@@ -177,8 +199,11 @@ final class MergeInto private (
             insertClauses.flatMap(_.values.toSeq)
         assigned.map(_._1).distinct.filterNot(known).map { n =>
           val e = assigned.collectFirst { case (`n`, v) => v }.get
+          // a set value resolves in the join, an insert value on the source
+          val scope = if (matchedClauses.exists(_.set.exists(_.contains(n))) ||
+            bySourceClauses.exists(_.set.exists(_.contains(n)))) joined else u0
           org.apache.spark.sql.types.StructField(
-            n, joined.select(expr(e)).schema.head.dataType)
+            n, scope.select(expr(e)).schema.head.dataType)
         }
       }
     val outFields = targetSchema.fields.toSeq ++ evolved
@@ -199,9 +224,10 @@ final class MergeInto private (
         case ((MatchedClause(_, None), _), els) => els // delete: filtered above
       }
       val nul: Column = lit(null).cast(f.dataType)
-      val insertValue = insertClauses.zip(insApplicable).foldRight(nul) {
-        case ((cl, app), els) =>
-          val v = cl.values.get(f.name).map(expr(_).cast(f.dataType)).getOrElse(nul)
+      val insertValue = insValues.zip(insApplicable).foldRight(nul) {
+        case ((names, app), els) =>
+          val v = names.get(f.name)
+            .map(n => col(s"`$updatesAlias`.`$n`").cast(f.dataType)).getOrElse(nul)
           when(app, v).otherwise(els)
       }
       (if (insertClauses.isEmpty) withClauses

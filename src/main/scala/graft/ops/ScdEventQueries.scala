@@ -70,13 +70,12 @@ object ScdEventQueries {
 
   /** Materialized intermediates, memoized per (session, dir): the
     * day-1/day-2 batches (ONE events scan + window for both) and the
-    * day-1 state. The SCD plan references each from the snapshot
-    * window, both split joins and both merges — left lazy, Spark would
-    * re-execute the upstream DAG at every reference; and both SCD
-    * queries (apply + point-in-time) share the same intermediates, the
-    * way ScdTable persists state and batches arrive materialized in
-    * real use. The day-2 merge plans themselves are NOT memoized —
-    * each query invocation re-executes them.
+    * day-1 state. Left lazy, every SCD query would re-execute the
+    * upstream events DAG; and both SCD queries (apply + point-in-time)
+    * share the same intermediates, the way ScdTable persists state and
+    * batches arrive materialized in real use. The day-2 merge plans
+    * themselves are NOT memoized — each query invocation re-executes
+    * them.
     */
   private val memo =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
@@ -99,8 +98,8 @@ object ScdEventQueries {
     })
 
   /** Day-1 initial load then day-2 incremental — exercises the full
-    * §2.11 pipeline: snapshot dedup, stamping, both joins, both hash
-    * keys, unionByName and both emulated merges, twice.
+    * §2.11 pipeline (snapshot dedup, stamping, both hash keys, the split
+    * and both merges) through the SCD kernel, twice.
     */
   def scdApplyDay2(spark: SparkSession, dir: String): DataFrame = {
     val (s1, b2, _) = day1StateAndBatches(spark, dir)
@@ -241,13 +240,13 @@ object ScdEventQueries {
     */
   private def incrementalDim(spark: SparkSession, dir: String): graft.lake.IncrementalScdTable = {
     val src = new java.io.File(s"$dir/events.parquet")
-    // tag v4: the applyScd build arc changed again (bucket-keyed identity
-    // allocation + file-backed _tmp staging) — bumping forces the
+    // tag v5: the applyScd build arc changed again (the one-exchange
+    // SCD kernel replaced split + two merges) — bumping forces the
     // driver's gate to rebuild THROUGH the new arc rather than serve a
     // cache the old code built
     val key = java.lang.Integer.toHexString(
-      (dir, src.length, src.lastModified, "scdinc4").hashCode)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_lake_scdinc4_$key"
+      (dir, src.length, src.lastModified, "scdinc5").hashCode)
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_lake_scdinc5_$key"
     def open() = new graft.lake.IncrementalScdTable(spark, path,
       numBuckets = 8, identityCol = Some("dim_sk"), identityStart = 10L)
     val existing = open()
@@ -301,8 +300,8 @@ object ScdEventQueries {
   private def streamedDim(spark: SparkSession, dir: String): graft.lake.IncrementalScdTable = {
     val src = new java.io.File(s"$dir/events.parquet")
     val key = java.lang.Integer.toHexString(
-      (dir, src.length, src.lastModified, "scdstrm3").hashCode)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_lake_scdstrm3_$key"
+      (dir, src.length, src.lastModified, "scdstrm4").hashCode)
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_lake_scdstrm4_$key"
     def open() = new graft.lake.IncrementalScdTable(spark, path,
       numBuckets = 8, identityCol = Some("dim_sk"), identityStart = 10L)
     val existing = open()

@@ -76,7 +76,10 @@ class ScdTable(
   }
 
   /** The reference's `apply_scd` (scd_handler.py:58-163) end-to-end:
-    * split once against one snapshot, run both merges, persist once.
+    * the SCD kernel ([[ScdApply.nextState]]: split and both merges in
+    * one per-key pass) against one snapshot, persisted once. With
+    * `trackMetrics`, the literal `delta_merge` port
+    * ([[ScdApply.viaMerges]]) prices merge #2 for [[lastMetrics]].
     * Empty-source guard (scd_handler.py:151,162) becomes: skip the write
     * entirely when the source is empty (the merges are then identity).
     *
@@ -91,12 +94,8 @@ class ScdTable(
   def applyScd(source: DataFrame, cfg: ScdConfig, trackMetrics: Boolean = false): Unit = {
     if (source.isEmpty) return
     val snap = snapshot()
-    val delta = ScdApply.split(snap, source, cfg)
-    val close = MergeEmulator.merge(snap, delta.inactiveUpdates, cfg.pkCols)
-    val upsert =
-      MergeEmulator.merge(close.next, delta.activeUnion, cfg.pkCols, isActiveData = true)
-    if (trackMetrics) _lastMetrics = Some(upsert.metrics())
-    overwrite(withIdentity(upsert.next))
+    if (trackMetrics) _lastMetrics = Some(ScdApply.viaMerges(snap, source, cfg).metrics())
+    overwrite(withIdentity(ScdApply.nextState(snap, source, cfg)))
   }
 
   protected def withIdentity(next: DataFrame): DataFrame = identityCol match {

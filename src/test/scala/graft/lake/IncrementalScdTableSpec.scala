@@ -444,4 +444,120 @@ class IncrementalScdTableSpec extends AnyFunSuite with SparkSpec {
     // a CDC-less DATA-CHANGING rewrite stays untraversable (while
     // datachange=false maintenance is skipped): ChangeFeedSpec pins both
   }
+
+  test("TEST batches from a BIGINT source into an 8-bucket INT-keyed table " +
+    "reach the golden states: touched buckets come from the table-typed key") {
+    import java.sql.Timestamp
+    import org.apache.spark.sql.Row
+    def ts(s: String) = Timestamp.valueOf(s)
+    // account_scd2 (id INT, identity START WITH 10) fed by account_src
+    // (id BIGINT), test_scd_handler.py:40-69
+    val dimSchema = StructType(Seq(
+      StructField("account_key", LongType), StructField("id", IntegerType),
+      StructField("stock_name", StringType), StructField("units", IntegerType),
+      StructField("platform", StringType)) ++
+      ScdConfig.SystemCols.map(c => StructField(c,
+        if (c == "record_status" || c.endsWith("_key")) StringType else TimestampType)))
+    val srcSchema = StructType(Seq(
+      StructField("id", LongType), StructField("stock_name", StringType),
+      StructField("units", LongType), StructField("platform", StringType),
+      StructField("reg_ts", TimestampType), StructField("last_modify_ts", TimestampType)))
+    def src(rows: (Long, String, Long, String, String, String)*) =
+      spark.createDataFrame(java.util.Arrays.asList(rows.map { case (id, sn, u, p, r, m) =>
+        Row(id, sn, u, p, ts(r), ts(m)) }: _*), srcSchema)
+    def run(day: Int) = ScdConfig(
+      pkCols = Seq("id", "stock_name"), scdKeyCols = Seq("units"),
+      selectCols = Some(Seq("id", "stock_name", "units", "platform")),
+      effectiveFromCol = Some("last_modify_ts"), initialEffDateCol = Some("reg_ts"),
+      clock = () => Instant.parse(f"2025-05-$day%02dT12:00:00Z"))
+    val dir = Files.createTempDirectory("iscd_test_types").toString
+    val t = new IncrementalScdTable(spark, s"$dir/account_scd2", numBuckets = 8,
+      identityCol = Some("account_key"), identityStart = 10L)
+    t.create(dimSchema)
+    def state = t.snapshot().collect().map(r => (r.getAs[Int]("id").toLong,
+      r.getAs[String]("stock_name"), r.getAs[Int]("units").toLong,
+      r.getAs[String]("platform"), r.getAs[String]("record_status"),
+      r.getAs[Timestamp]("effective_from"),
+      Option(r.getAs[Timestamp]("effective_to")))).toSeq.sortBy(_.toString)
+    def golden(rows: (Long, String, Long, String, String, String, Option[String])*) =
+      rows.map(g => (g._1, g._2, g._3, g._4, g._5, ts(g._6), g._7.map(ts)))
+        .sortBy(_.toString)
+
+    t.applyScd(src(
+      (1L, "Google", 0L, "Kite", "2015-12-25 10:05:30", "2025-05-10 10:05:20"),
+      (1L, "BTC", 0L, "Binance", "2016-12-25 11:05:30", "2025-05-11 10:05:20"),
+      (3L, "ETH", 20L, "Binance", "2016-12-26 12:07:35", "2025-05-11 10:05:20")), run(11))
+    t.applyScd(src(
+      (1L, "Google", 100L, "Kite", "2015-12-25 10:05:30", "2025-05-12 10:05:20"),
+      (1L, "BTC", 171L, "Binance", "2016-12-25 11:05:30", "2025-05-12 10:05:20"),
+      (3L, "ETH", 20L, "Binance", "2016-12-26 12:07:35", "2025-05-11 10:05:20")), run(12))
+    // incremental_run_1.png
+    assert(state === golden(
+      (1L, "Google", 0L, "Kite", "I", "2015-12-25 10:05:30", Some("2025-05-12 10:05:20")),
+      (1L, "Google", 100L, "Kite", "A", "2025-05-12 10:05:20", None),
+      (1L, "BTC", 0L, "Binance", "I", "2016-12-25 11:05:30", Some("2025-05-12 10:05:20")),
+      (1L, "BTC", 171L, "Binance", "A", "2025-05-12 10:05:20", None),
+      (3L, "ETH", 20L, "Binance", "A", "2016-12-26 12:07:35", None)))
+    t.applyScd(src(
+      (1L, "Google", 100L, "CoinSwitch", "2015-12-25 10:05:30", "2025-05-13 10:05:20"),
+      (1L, "BTC", 200L, "CoinSwitch", "2016-12-25 11:05:30", "2025-05-13 10:05:20")), run(13))
+    // incremental_run_2.png
+    val s3 = state
+    assert(s3 === golden(
+      (1L, "Google", 0L, "Kite", "I", "2015-12-25 10:05:30", Some("2025-05-12 10:05:20")),
+      (1L, "Google", 100L, "CoinSwitch", "A", "2025-05-12 10:05:20", None),
+      (1L, "BTC", 0L, "Binance", "I", "2016-12-25 11:05:30", Some("2025-05-12 10:05:20")),
+      (1L, "BTC", 171L, "Binance", "I", "2025-05-12 10:05:20", Some("2025-05-13 10:05:20")),
+      (1L, "BTC", 200L, "CoinSwitch", "A", "2025-05-13 10:05:20", None),
+      (3L, "ETH", 20L, "Binance", "A", "2016-12-26 12:07:35", None)))
+    assert(s3.count(r => r._2 == "BTC" && r._5 == "A" && r._7.isEmpty) === 1)
+  }
+
+  test("the slice plan applyScd writes has exactly one shuffle exchange " +
+    "and no join: split and both merges run as one per-key pass") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.SparkPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val slicePlans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val roots = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // the write runs under AQE as a whole (its query shuffles): search
+    // through adaptive plans and query stages for the slice write
+    def sliceWrites(p: SparkPlan): Seq[SparkPlan] = helper.collect(p) {
+      case DataWritingCommandExec(cmd: InsertIntoHadoopFsRelationCommand, child)
+          if cmd.outputPath.toString.contains("/_tmp/slice-") => child
+    }
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
+        roots.add(qe.executedPlan.nodeName)
+        sliceWrites(qe.executedPlan).foreach(slicePlans.add)
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    val dir = Files.createTempDirectory("iscd_plan").toString
+    val t = new IncrementalScdTable(spark, s"$dir/t", numBuckets = 8)
+    t.create(schema)
+    spark.listenerManager.register(listener)
+    try {
+      t.applyScd(batch((1L to 30L).map(k => (k, s"v$k")): _*), at(1))
+      t.applyScd(batch((1L, "a2"), (2L, "v2"), (3L, "c3"), (99L, "z")), at(2))
+      // listener delivery is async
+      val deadline = System.currentTimeMillis() + 30000
+      while (slicePlans.size < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val plans = slicePlans.asScala.toSeq
+    assert(plans.size === 2,
+      s"expected one slice write per batch; plans seen: ${roots.asScala.mkString(", ")}")
+    plans.foreach { p =>
+      val nodes = helper.collectWithSubqueries(p) { case n => n }
+      assert(nodes.count(_.isInstanceOf[ShuffleExchangeLike]) === 1, s"\n$p")
+      assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]), s"join in the slice plan:\n$p")
+    }
+  }
 }

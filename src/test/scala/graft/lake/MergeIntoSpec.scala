@@ -142,4 +142,39 @@ class MergeIntoSpec extends AnyFunSuite with SparkSpec {
       .orderBy("id").collect().map(_.getInt(0))
     assert(next.toSeq === Seq(2)) // id=1 deleted; id=2 kept despite NULL cond
   }
+
+  test("NOT MATCHED BY SOURCE update/delete beside an insert clause never " +
+    "touch the inserted rows") {
+    def withInsert(m: MergeInto) = m
+      .whenMatchedUpdate(Map("v" -> "updates.v"))
+      .whenNotMatchedInsert(Map("id" -> "updates.id", "v" -> "updates.v", "n" -> "updates.n"))
+      .resolve()
+      .orderBy("id").collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2))).toSeq
+    val updated = withInsert(MergeInto(target, updates, "target.id = updates.id")
+      .whenNotMatchedBySourceUpdate(Map("v" -> "'orphan'", "n" -> "-1")))
+    assert(updated === Seq(
+      (1, "orphan", -1), // target-only row: the by-source clause
+      (2, "B2", 20),
+      (3, "c", 30),
+      (4, "d", 40)))     // inserted exactly as the insert clause says
+    val deleted = withInsert(MergeInto(target, updates, "target.id = updates.id")
+      .whenNotMatchedBySourceDelete())
+    assert(deleted === Seq((2, "B2", 20), (3, "c", 30), (4, "d", 40)))
+  }
+
+  test("insert values and conditions resolve against the source alone") {
+    // `v` and `n` exist on both sides: in an insert they are the source's
+    val next = MergeInto(target, updates, "target.id = updates.id")
+      .whenNotMatchedInsert(Map("id" -> "id", "v" -> "upper(v)", "n" -> "n + 1"),
+        condition = Some("n < 100"))
+      .resolve()
+      .orderBy("id").collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2)))
+    assert(next.toSeq === Seq((1, "a", 10), (2, "b", 20), (3, "c", 30), (4, "D", 41)))
+    // an inserted row has no target side to read
+    intercept[org.apache.spark.sql.AnalysisException] {
+      MergeInto(target, updates, "target.id = updates.id")
+        .whenNotMatchedInsert(Map("id" -> "updates.id", "v" -> "target.v"))
+        .resolve()
+    }
+  }
 }
