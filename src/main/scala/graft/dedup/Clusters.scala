@@ -73,6 +73,7 @@ object Clusters {
   def connectedComponents(
       pairs: DataFrame, aCol: String = "a", bCol: String = "b",
       maxIter: Int = 25): DataFrame = {
+    val thresh = localEdgeThreshold(pairs.sparkSession)
     // materialize the pair list FIRST: the caller usually hands us the
     // lazy output of a whole near-dup pipeline, and referencing it in
     // both union branches below would execute that pipeline twice
@@ -92,8 +93,6 @@ object Clusters {
     // Spark's: numeric for integral ids, unsigned UTF-8 bytes for
     // strings). Big graphs take the distributed path unchanged; the
     // budget is a session conf, 0 disables.
-    val thresh = p.sparkSession.conf
-      .get("graft.cc.localEdgeThreshold", "100000").toInt
     if (thresh > 0 && localOrdering(p.schema("src").dataType).isDefined &&
         p.schema("dst").dataType == p.schema("src").dataType) {
       val sample = p.take(thresh + 1)
@@ -178,6 +177,21 @@ object Clusters {
       return connectedComponentsStar(p, "src", "dst")
     }
     labels
+  }
+
+  /** `graft.cc.localEdgeThreshold`: the largest edge count that takes
+    * the driver-local path (default 100000, 0 disables it). A value
+    * that is not an integer in [0, Int.MaxValue - 1] fails here, naming
+    * the conf, rather than as a bare NumberFormatException or a
+    * negative `take` size.
+    */
+  private[dedup] def localEdgeThreshold(spark: SparkSession): Int = {
+    val key = "graft.cc.localEdgeThreshold"
+    val raw = spark.conf.get(key, "100000")
+    raw.trim.toIntOption.filter(t => t >= 0 && t < Int.MaxValue).getOrElse(
+      throw new IllegalArgumentException(
+        s"$key must be an integer between 0 and ${Int.MaxValue - 1} " +
+          s"(0 disables the driver-local path), got '$raw'"))
   }
 
   /** Total order matching Spark's `min` for the supported id types —

@@ -896,14 +896,14 @@ object ScaleEvidence {
       * 64·k buckets) and applies a CONSTANT 2k-key batch confined to
       * 4 buckets: the incremental apply must stay ~FLAT at 10× (it
       * reads and rewrites only the touched buckets' slice — constant
-      * here by construction) while the reference-shaped plain
-      * [[graft.scd.ScdTable]] foil rewrites the whole dimension and
-      * grows ~linearly. Identity allocation is ON for the incremental
+      * here by construction) while the one-bucket foil (the same table
+      * with `numBuckets = 1`, so every batch rewrites the whole
+      * dimension, as the reference's MERGE does) grows ~linearly. Identity allocation is ON for the incremental
       * table — the watermark ride is part of the batch cost being
       * measured.
       */
     def scdIncExperiment(base: java.nio.file.Path, k: Int): Unit = {
-      import graft.scd.{ScdConfig, ScdTable}
+      import graft.scd.ScdConfig
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
       val n = 1000000L * k
       val buckets = 64 * k
@@ -950,8 +950,10 @@ object ScaleEvidence {
       require(snap.count() == n + 2000)
       require(snap.filter(col("record_status") === "I").count() == 2000)
       require(snap.select("row_id").distinct().count() == n + 2000)
-      // foil: the reference-shaped full-rewrite table, same two batches
-      val p = new ScdTable(spark, s"$base/scdinc_x$k/plain")
+      // foil: one bucket, so every batch rewrites the whole table; same
+      // two batches
+      val p = new graft.lake.IncrementalScdTable(spark,
+        s"$base/scdinc_x$k/plain", numBuckets = 1)
       p.create(plainSchema)
       p.applyScd(mkBatch(spark.range(n).toDF("id"), "v", withId = false), at(1))
       val plainS = timed(

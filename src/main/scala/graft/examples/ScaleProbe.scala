@@ -72,17 +72,9 @@ object ScaleProbe {
             org.apache.spark.sql.types.StringType
           else org.apache.spark.sql.types.TimestampType)))
 
-    def drive(table: graft.scd.ScdTable, label: String,
-        d1: DataFrame, d2: DataFrame): Unit = {
-      table.create(schema)
-      table.applyScd(d1, cfg)
-      val (_, t) = time {
-        table.applyScd(d2,
-          cfg.copy(clock = () => Instant.parse("2025-06-02T00:00:00Z")))
-      }
-      println(f"[scale] $label%-18s incremental_apply_s=$t%6.2f rows=${table.snapshot().count()}")
-    }
-    def driveInc(table: graft.lake.IncrementalScdTable, label: String,
+    // one bucket = the whole table rewritten every batch (the
+    // full-rewrite foil); more buckets = only the touched ones
+    def drive(table: graft.lake.IncrementalScdTable, label: String,
         d1: DataFrame, d2: DataFrame): Unit = {
       table.create(schema)
       table.applyScd(d1, cfg)
@@ -93,9 +85,9 @@ object ScaleProbe {
       println(f"[scale] $label%-18s incremental_apply_s=$t%6.2f rows=${table.snapshot().count()}")
     }
     val base = java.nio.file.Files.createTempDirectory("scale_scd").toString
-    drive(new graft.scd.ScdTable(spark, s"$base/full"), "full-rewrite",
-      day1, day2small)
-    driveInc(new graft.lake.IncrementalScdTable(spark, s"$base/inc",
+    drive(new graft.lake.IncrementalScdTable(spark, s"$base/full",
+      numBuckets = 1), "full-rewrite", day1, day2small)
+    drive(new graft.lake.IncrementalScdTable(spark, s"$base/inc",
       numBuckets = 64), "incremental-64", day1, day2small)
 
     // the crossover: a 50x dimension with the SAME small batch — full
@@ -104,9 +96,9 @@ object ScaleProbe {
       .map(i => day1.withColumn("user_id", col("user_id") + lit(i * 100000L)))
       .reduce(_ unionByName _).localCheckpoint()
     println(s"[scale] 50x dimension (${day1big.count()} keys), same 20-key batch")
-    drive(new graft.scd.ScdTable(spark, s"$base/full50"), "full-rewrite-50x",
-      day1big, day2small)
-    driveInc(new graft.lake.IncrementalScdTable(spark, s"$base/inc50",
+    drive(new graft.lake.IncrementalScdTable(spark, s"$base/full50",
+      numBuckets = 1), "full-rewrite-50x", day1big, day2small)
+    drive(new graft.lake.IncrementalScdTable(spark, s"$base/inc50",
       numBuckets = 256), "incremental-256-50x", day1big, day2small)
 
     // ---- stats-based data skipping: selective scans on a clustered

@@ -5,7 +5,8 @@ import java.time.Instant
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.scd.{ScdConfig, ScdTable}
+import graft.lake.IncrementalScdTable
+import graft.scd.ScdConfig
 import graft.scd.ScdConfig.SystemCols
 
 /** Usage demo of the SCD engine against the driver testdata: treats the
@@ -50,7 +51,7 @@ object ScdDemo {
       java.nio.file.Files.walk(tableDir).iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.deleteIfExists(_))
     }
-    val table = new ScdTable(spark, tableDir.toString)
+    val table = new IncrementalScdTable(spark, tableDir.toString, numBuckets = 8)
     val cfg = ScdConfig(
       pkCols = Seq("user_id", "event_type"),
       scdKeyCols = Seq("value"),
@@ -72,10 +73,11 @@ object ScdDemo {
         table.create(schema)
       }
       table.applyScd(batch,
-        cfg.copy(clock = () => Instant.parse(f"2025-06-0${i + 1}T00:00:00Z")),
-        trackMetrics = true)
+        cfg.copy(clock = () => Instant.parse(f"2025-06-0${i + 1}T00:00:00Z")))
+      // the latest commit: the `history(1)` surface of the reference
+      // (scd_handler.py:54-55)
       println(s"--- after batch $day: rows=${table.snapshot().count()} " +
-        s"metrics=${table.lastMetrics}")
+        s"commit=${table.table.history().take(1).headOption.getOrElse("none")}")
     }
 
     val dim = table.snapshot()

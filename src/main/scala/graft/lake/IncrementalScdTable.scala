@@ -41,8 +41,7 @@ import graft.scd.{ScdApply, ScdConfig}
   * test_scd_handler.py:41) are supported the way Delta does it: the
   * surrogate-key HIGH WATERMARK rides the commit manifest's metadata,
   * so allocating ids for a batch reads ONE small manifest — never a
-  * `max()` scan over the table (ScdTable's per-batch fallback, O(table)
-  * at 100 TB). Assigned ids are unique and ascending across batches but
+  * `max()` scan over the table (O(table) at 100 TB). Assigned ids are unique and ascending across batches but
   * not gap-free — the same contract as Delta identity columns.
   */
 final class IncrementalScdTable(
@@ -160,9 +159,18 @@ final class IncrementalScdTable(
       .getOrElse(emptyFrame(storedSchema))
   }
 
-  /** One SCD batch; returns the committed version (the current latest
-    * when the batch is a no-op, -1 when a no-op hits a table with no
-    * versions yet — an empty batch must not commit a zero-file v0).
+  /** One SCD batch — the reference's `apply_scd` (scd_handler.py:58-163);
+    * returns the committed version (the current latest when the batch
+    * is a no-op, -1 when a no-op hits a table with no versions yet — an
+    * empty batch must not commit a zero-file v0).
+    *
+    * PRECONDITION (inherited from the reference): `cfg.clock` must move
+    * forward across successive calls on one table. Version recency is
+    * decided by `dw_inserted_at DESC` (scd_handler.py:73), so a batch
+    * stamped with an older clock than rows already in the table makes the
+    * snapshot dedup pick a closed row as "current", which can leave a key
+    * with two active rows. Observed empirically by replaying batches with
+    * reused fixed clocks (see examples/ScdDemo).
     */
   def applyScd(source: DataFrame, cfg: ScdConfig): Long = {
     // pin the read version: the commit below removes exactly the files

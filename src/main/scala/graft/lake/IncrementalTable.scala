@@ -21,9 +21,8 @@ class CommitConflictException(msg: String) extends RuntimeException(msg)
   */
 final class StaleRewriteException(msg: String) extends CommitConflictException(msg)
 
-/** File-level incremental commits — the evolution of
-  * [[VersionedTable]]'s full-snapshot model that survives 100 TB:
-  * each manifest lists the DATA FILES composing that version, so a
+/** The table format: file-level incremental commits that survive
+  * 100 TB. Each manifest lists the DATA FILES composing that version, so a
   * commit that touches 1 GB of a 100 TB table writes 1 GB of new files
   * plus a manifest that re-references everything else (the Delta/
   * Iceberg add-remove log idea, on one manifest per version).
@@ -45,7 +44,7 @@ final class StaleRewriteException(msg: String) extends CommitConflictException(m
   * sidecar) plus at most [[IncrementalTable.CheckpointInterval]]
   * deltas.
   *
-  * Commit protocol (same pointer-commit as VersionedTable): stage new
+  * Commit protocol (a pointer commit, like a Delta log entry): stage new
   * files under `_stage/<nonce>/`, MOVE them into `data/` (rename, no
   * copy), then publish the manifest via write-tmp + rename. A reader
   * only sees files referenced by a committed manifest, so crashed
@@ -329,11 +328,6 @@ final class IncrementalTable(
   }
 
   def exists: Boolean = latestVersion.isDefined
-
-  /** Distinguishes this layout from [[VersionedTable]]'s (both keep
-    * `_log/`, only this one keeps a `data/` directory).
-    */
-  def isIncrementalLayout: Boolean = exists && fs.exists(dataDir)
 
   def versionExists(v: Long): Boolean = fs.exists(manifestPath(v))
 
@@ -3283,7 +3277,6 @@ final class IncrementalTable(
       if (e.startsWith("ext:")) e // clone of a clone: keep the original refs
       else "ext:" + src.fs.makeQualified(new Path(src.dataDir, e)).toString
     }
-    fs.mkdirs(dataDir) // marks the incremental layout
     val srcMeta = src.metaAt(v)
     val dvMeta = srcMeta.get("dv") match {
       case None => Map.empty[String, String]

@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   *
   * Differences from Delta, by design:
   *  - `resolve()` RETURNS the full next table state instead of
-  *    committing — the caller owns persistence ([[VersionedTable]],
-  *    `ScdTable`, or a plain write);
+  *    committing — the caller owns persistence (an
+  *    [[IncrementalTable]] commit, or a plain write);
   *  - a target row matched by >1 update rows is undefined behavior
   *    (Delta throws at runtime; detecting it here would cost a count —
   *    [[graft.scd.MergeEmulator]] documents the same contract).

@@ -72,8 +72,8 @@ object ScdEventQueries {
     * day-1/day-2 batches (ONE events scan + window for both) and the
     * day-1 state. Left lazy, every SCD query would re-execute the
     * upstream events DAG; and both SCD queries (apply + point-in-time)
-    * share the same intermediates, the way ScdTable persists state and
-    * batches arrive materialized in real use. The day-2 merge plans
+    * share the same intermediates, the way a persisted SCD table holds
+    * state and batches arrive materialized in real use. The day-2 merge plans
     * themselves are NOT memoized — each query invocation re-executes
     * them.
     */

@@ -260,8 +260,8 @@ object GraftMaintenanceSql {
   private[graftmerge] def incrementalAt(spark: SparkSession, target: String): IncrementalTable = {
     val path = resolvePath(spark, target)
     val t = new IncrementalTable(spark, path)
-    require(t.isIncrementalLayout,
-      s"graft maintenance SQL needs an incremental-manifest table: $path")
+    require(t.exists,
+      s"graft maintenance SQL needs a graft table: $path")
     t
   }
 }

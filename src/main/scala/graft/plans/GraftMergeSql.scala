@@ -135,7 +135,7 @@ object GraftMergeParser {
       key -> a.value.sql
     }.toMap
 
-  /** DML targets naming a graft-catalog INCREMENTAL table route to the
+  /** DML targets naming a graft-catalog table route to the
     * manifest-commit DML (touched-file rewrite, atomic CDC, optional
     * deletion vectors) instead of the session-catalog staging swap.
     */
@@ -148,7 +148,7 @@ object GraftMergeParser {
         val path = gc.tablePath(org.apache.spark.sql.connector.catalog.Identifier
           .of(parts.tail.init.toArray, parts.last))
         val t = new graft.lake.IncrementalTable(spark, path)
-        if (t.isIncrementalLayout) Some(t) else None
+        if (t.exists) Some(t) else None
       case _ => None
     }
   }
@@ -156,12 +156,13 @@ object GraftMergeParser {
 
 /** Runtime half of graft's SQL MERGE: resolves the (catalog, parquet)
   * target and the source plan, replays clauses through
-  * [[graft.lake.MergeInto]], and atomically replaces the target's
-  * contents. Scale shape is MergeInto's: the merge itself is one
-  * left-outer + one left-anti join on the merge condition (single key
-  * shuffle, AQE broadcast for a small source); the staging write adds
-  * one linear pass (the price of not having a transaction log — the
-  * manifest-commit upgrade lives in [[graft.lake.VersionedTable]]).
+  * [[graft.lake.MergeInto]], and replaces the target's contents. Scale
+  * shape is MergeInto's: the merge itself is one full-outer join on the
+  * merge condition (single key shuffle) plus a gated projection. A
+  * graft-catalog target commits the result as one manifest version
+  * ([[graft.lake.IncrementalTable.writeSnapshot]]); a session-catalog
+  * parquet target goes through [[GraftTableSwap]]'s staging write, one
+  * extra linear pass.
   */
 case class MergeIntoGraftCommand(
     targetParts: Seq[String],
@@ -294,8 +295,8 @@ case class UpdateGraftCommand(
   * state into a staging table BEFORE touching the target (the plan
   * reads the target's current files), then INSERT OVERWRITE and drop
   * the staging table. One extra linear pass — the price of DML without
-  * a transaction log; `lake.VersionedTable` is the manifest-commit
-  * upgrade path.
+  * a transaction log; graft-catalog targets commit through
+  * [[graft.lake.IncrementalTable]]'s manifest log instead.
   *
   * The staging table carries a per-invocation nonce and lives in the
   * target's own database, so concurrent DML on the same target never

@@ -67,9 +67,9 @@ final case class ScdStamped(rows: DataFrame, selectCols: Seq[String])
   *    one key group is buffered at a time;
   *  - the literal port ([[viaMerges]]: [[split]] feeding
   *    [[MergeEmulator]] twice) — the reference's `delta_merge`
-  *    composition, kept as the source of [[ScdTable]]'s opt-in merge
-  *    metrics and as the oracle the kernel is tested against
-  *    (`ScdKernelDifferentialSpec`).
+  *    composition, kept as the reference port (its [[MergeResult]]
+  *    carries the `history(1)` merge metrics) and as the oracle the
+  *    kernel is tested against (`ScdKernelDifferentialSpec`).
   *
   * Nothing here collects to the driver.
   */
@@ -236,8 +236,9 @@ object ScdApply {
   }
 
   /** Full next table state: the kernel over `targetSnapshot`, keyed by
-    * the business key. The caller (e.g. [[ScdTable.applyScd]]) owns
-    * persistence.
+    * the business key. The caller owns persistence
+    * ([[graft.lake.IncrementalScdTable.applyScd]] runs [[merge]] over
+    * the touched slice instead).
     */
   def nextState(targetSnapshot: DataFrame, source: DataFrame, cfg: ScdConfig): DataFrame =
     merge(targetSnapshot, stamp(source, targetSnapshot.schema, cfg), cfg)

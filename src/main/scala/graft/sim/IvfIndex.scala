@@ -459,7 +459,7 @@ object IvfIndex {
     val raw = new org.apache.hadoop.fs.Path(s"$path/raw")
     val fs = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(raw) &&
-        !new graft.lake.IncrementalTable(spark, s"$path/raw").isIncrementalLayout)
+        !new graft.lake.IncrementalTable(spark, s"$path/raw").exists)
       throw new IllegalStateException(
         s"IVF index at $path uses the legacy raw-store layout (plain " +
           "parquet, no _log) — rebuild the index with IvfIndex.build " +

@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.lake.{IncrementalTable, VersionedTable}
+import graft.lake.IncrementalTable
 
 /** Path-convention catalog over graft tables — the piece that turns the
   * connector into a full SQL surface:
@@ -82,7 +82,7 @@ class GraftCatalog extends TableCatalog
   def tablePath(ident: Identifier): String = pathOf(ident)
 
   private def isTableDir(path: String): Boolean =
-    new IncrementalTable(spark, path).exists || new VersionedTable(spark, path).exists
+    new IncrementalTable(spark, path).exists
 
   private def tableAt(path: String, extra: Map[String, String]): Table = {
     // a column-mapped table can't be served through the path-level
@@ -90,8 +90,7 @@ class GraftCatalog extends TableCatalog
     // stub so DDL (ALTER ... RENAME/DROP COLUMN, DESCRIBE) resolves,
     // while scans fail with the connector's materialization hint
     val incM = new IncrementalTable(spark, path)
-    if (incM.isIncrementalLayout &&
-        (incM.colMap.nonEmpty || incM.droppedCols.nonEmpty))
+    if (incM.colMap.nonEmpty || incM.droppedCols.nonEmpty)
       return new GraftMappedStubTable(path,
         incM.logicalSchema.getOrElse(new org.apache.spark.sql.types.StructType()))
     val ds = new GraftDataSource
@@ -105,11 +104,10 @@ class GraftCatalog extends TableCatalog
     val opts = new CaseInsensitiveStringMap(props)
     val t = ds.getTable(ds.inferSchema(opts), ds.inferPartitioning(opts), props)
     t match {
-      // catalog-resolved incremental tables accept SQL INSERT (append /
-      // overwrite manifest commits) — but only at the LATEST version;
+      // catalog-resolved tables accept SQL INSERT (append / overwrite
+      // manifest commits) — but only at the LATEST version;
       // time-traveled reads stay read-only
-      case ro: GraftReadOnlyTable
-          if extra.isEmpty && new IncrementalTable(spark, path).isIncrementalLayout =>
+      case ro: GraftReadOnlyTable if extra.isEmpty =>
         new GraftWritableTable(ro, path)
       case other => other
     }
@@ -304,8 +302,7 @@ class GraftCatalog extends TableCatalog
       }
     }
     val t = new IncrementalTable(spark, p)
-    // empty v0 carrying the DDL schema; data/ marks the incremental layout
-    fs(p).mkdirs(new Path(p, "data"))
+    // empty v0 carrying the DDL schema
     t.commitFiles(Seq.empty, Set.empty, "create", schema = Some(schema))
     graftProps.foreach {
       case ("graft.bloomColumns", v) => t.setBloomColumns(cols(v): _*)
@@ -335,8 +332,6 @@ class GraftCatalog extends TableCatalog
     val p = pathOf(ident)
     if (!isTableDir(p)) throw new NoSuchTableException(ident)
     val inc = new IncrementalTable(spark, p)
-    require(inc.isIncrementalLayout,
-      s"graft: ALTER TABLE needs an incremental-manifest table: $p")
     val adds = changes.collect { case a: TableChange.AddColumn => a }
     val renames = changes.collect { case r: TableChange.RenameColumn => r }
     val drops = changes.collect { case d: TableChange.DeleteColumn => d }

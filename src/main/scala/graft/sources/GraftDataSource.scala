@@ -11,9 +11,9 @@ import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, Da
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.lake.{IncrementalTable, VersionedTable}
+import graft.lake.IncrementalTable
 
-/** DataSource surface for [[graft.lake.VersionedTable]]:
+/** DataSource surface for [[graft.lake.IncrementalTable]]:
   *
   * {{{
   *   spark.read.format("graft").load(path)                       // latest
@@ -23,28 +23,31 @@ import graft.lake.{IncrementalTable, VersionedTable}
   * }}}
   *
   * READ: the requested version resolves through the table's commit
-  * manifests (uncommitted/crashed writer directories stay invisible),
-  * then bytes are served by Spark's own parquet DSv2 on the immutable
-  * version directory — predicate pushdown, column pruning, vectorized
-  * reads and partition discovery are all inherited, not re-implemented.
-  * Same layering Delta uses: the table format owns version→file
-  * resolution, the engine's parquet reader owns bytes.
+  * manifests to its data-file list (uncommitted/crashed writers' files
+  * stay invisible), then bytes are served by Spark's own parquet DSv2
+  * on exactly those files — predicate pushdown, column pruning and
+  * vectorized reads are all inherited, not re-implemented. Same
+  * layering Delta uses: the table format owns version→file resolution,
+  * the engine's parquet reader owns bytes.
   *
   * WRITE: every `save` commits a NEW version through the manifest
   * protocol (v1 `CreatableRelationProvider` path — the exposed Table is
   * deliberately read-only so `DataFrameWriter` falls back to it).
-  * `Overwrite` commits the frame as the next full snapshot; `Append`
-  * commits previous ∪ new (full-snapshot commit model).
+  * `Overwrite` commits the frame as a full snapshot (or, with
+  * `replaceWhere`, replaces only the matching slice); `Append` commits
+  * the frame's files on top of the current version. A save to a path
+  * with no table creates one, so a connector-made table streams, takes
+  * DML and MERGE like any other.
   *
   * Time travel mirrors Delta's reader options (`versionAsOf` /
   * `timestampAsOf`, the surface the reference's platform exposes).
   *
-  * STREAM: `spark.readStream.format("graft").load(path)` tails an
-  * incremental table's commit log as a DSv2 micro-batch stream
+  * STREAM: `spark.readStream.format("graft").load(path)` tails the
+  * table's commit log as a DSv2 micro-batch stream
   * ([[GraftMicroBatchStream]]; offsets are committed versions,
-  * `startingVersion` / `ignoreChanges` options as in Delta). Only the
-  * incremental layout advertises MICRO_BATCH_READ — a full-snapshot
-  * table fails loudly at load time.
+  * `startingVersion` / `ignoreChanges` options as in Delta). A path
+  * that holds no table advertises no MICRO_BATCH_READ and fails loudly
+  * at load time.
   */
 class GraftDataSource extends TableProvider
     with DataSourceRegister with CreatableRelationProvider
@@ -111,7 +114,7 @@ class GraftDataSource extends TableProvider
     val tracked =
       Option(options.get("path")).flatMap { p =>
         val inc = new IncrementalTable(SparkSession.active, p)
-        if (!inc.isIncrementalLayout) None
+        if (!inc.exists) None
         else if (!timeTravel) inc.tableSchema
         else scala.util.Try {
           Option(options.get("versionAsOf")).map(_.trim.toLong)
@@ -153,17 +156,16 @@ class GraftDataSource extends TableProvider
         }
     }
 
-  /** Streaming parameters, resolved iff the path is an incremental-
-    * manifest table (only that layout has a file-level commit log to
-    * tail — a full-snapshot table deliberately gets NO micro-batch
-    * capability, so `readStream` falls back to the v1 path whose
-    * schema resolution fails loudly at load time).
+  /** Streaming parameters, resolved iff the path holds a table (a
+    * path without a commit log gets NO micro-batch capability, so
+    * `readStream` falls back to the v1 path, which fails loudly at load
+    * time).
     */
   private def streamInfoFor(properties: JMap[String, String]): Option[GraftStreamInfo] = {
     val opts = new CaseInsensitiveStringMap(properties)
     Option(opts.get("path")).flatMap { p =>
       val inc = new IncrementalTable(SparkSession.active, p)
-      if (!inc.isIncrementalLayout) None
+      if (!inc.exists) None
       else {
         val startingVersion = Option(opts.get("startingVersion")) match {
           case Some("latest") => inc.latestVersion.map(_ + 1).getOrElse(0L)
@@ -207,43 +209,21 @@ class GraftDataSource extends TableProvider
       org.apache.spark.sql.functions.expr(sql)
     }
     val inc = new IncrementalTable(ctx.sparkSession, path)
-    if (inc.isIncrementalLayout) {
-      // An IncrementalTable shares the _log directory but its manifests
-      // carry a file list, not a v=N pointer — committing through
-      // VersionedTable here would publish a manifest the incremental
-      // reader cannot parse and brick latest-version resolution.
-      mode match {
-        case SaveMode.ErrorIfExists =>
-          throw new IllegalStateException(s"graft table already exists at $path")
-        case SaveMode.Ignore => ()
-        case SaveMode.Append => inc.append(df)
-        case _ => replaceWhere match {
-          case Some(pred) => inc.overwriteWhere(pred, df)
-          case None => inc.writeSnapshot(df, operation = "overwrite")
-        }
-      }
-    } else {
-      replaceWhere.foreach { _ =>
-        // VersionedTable rewrites the full snapshot per commit anyway,
-        // so a predicate-scoped overwrite has no partial-rewrite win
-        // there — and silently accepting the option while replacing the
-        // WHOLE table would be a correctness trap. Scope it to the
-        // incremental layout.
-        throw new IllegalArgumentException(
-          s"graft write: 'replaceWhere' needs an incremental-layout table " +
-            s"($path is ${if (new VersionedTable(ctx.sparkSession, path).exists)
-              "a full-snapshot VersionedTable" else "empty — append first"})")
-      }
-      val vt = new VersionedTable(ctx.sparkSession, path)
-      val exists = vt.exists
-      mode match {
-        case SaveMode.ErrorIfExists if exists =>
-          throw new IllegalStateException(s"graft table already exists at $path")
-        case SaveMode.Ignore if exists => ()
-        case SaveMode.Append if exists =>
-          vt.write(vt.snapshot().unionByName(df), operation = "append")
-        case _ =>
-          vt.write(df, operation = "overwrite")
+    val exists = inc.exists
+    mode match {
+      case SaveMode.ErrorIfExists if exists =>
+        throw new IllegalStateException(s"graft table already exists at $path")
+      case SaveMode.Ignore if exists => ()
+      case SaveMode.Append => inc.append(df)
+      case _ => replaceWhere match {
+        case Some(pred) =>
+          // a slice replacement of nothing would silently publish the
+          // frame as the whole table — refuse it
+          if (!exists) throw new IllegalArgumentException(
+            s"graft write: 'replaceWhere' needs an existing table " +
+              s"($path is empty — append first)")
+          inc.overwriteWhere(pred, df)
+        case None => inc.writeSnapshot(df, operation = "overwrite")
       }
     }
     new BaseRelation {
@@ -254,8 +234,8 @@ class GraftDataSource extends TableProvider
 
 }
 
-/** The parquet DSv2 with version-directory resolution spliced into path
-  * lookup. Kept private: exposing a FileDataSourceV2 directly would
+/** The parquet DSv2 with manifest file-list resolution spliced into
+  * path lookup. Kept private: exposing a FileDataSourceV2 directly would
   * send WRITES down Spark's fallback-file-format path, skipping the
   * manifest commit.
   */
@@ -271,87 +251,75 @@ private[sources] class GraftVersionedParquet extends ParquetDataSourceV2 {
     require(versionOpt.isEmpty || tsOpt.isEmpty,
       "graft: versionAsOf and timestampAsOf are mutually exclusive")
     roots.flatMap { root =>
-      // the connector serves both layouts: full-snapshot versions
-      // (VersionedTable, <root>/v=N/) and file-level manifests
-      // (IncrementalTable, <root>/data/ + per-version file lists)
       val inc = new IncrementalTable(sparkSession, root)
-      val vt = new VersionedTable(sparkSession, root)
-      val incremental = inc.isIncrementalLayout
-      def resolve(latest: Option[Long], has: Long => Boolean,
-          byTs: Long => Option[Long]): Long = (versionOpt, tsOpt) match {
+      val v = (versionOpt, tsOpt) match {
         case (Some(ver), _) =>
-          require(has(ver), s"graft: version $ver does not exist at $root")
+          require(inc.versionExists(ver), s"graft: version $ver does not exist at $root")
           ver
-        case (_, Some(ms)) => byTs(ms).getOrElse(
+        case (_, Some(ms)) => inc.versionAsOfTimestamp(ms).getOrElse(
           throw new IllegalArgumentException(
             s"graft: no version committed at or before ${map.get("timestampAsOf")} at $root"))
-        case _ => latest.getOrElse(
+        case _ => inc.latestVersion.getOrElse(
           throw new IllegalArgumentException(s"graft: empty table at $root"))
       }
-      if (incremental) {
-        val v = resolve(inc.latestVersion, inc.versionExists, inc.versionAsOfTimestamp)
-        // GENERIC feature gate: a bare path list can apply NO reader
-        // feature — column mapping would show stale names, deletion
-        // vectors would resurrect deleted rows, and a future feature
-        // could do anything. Every feature the version demands must be
-        // either explicitly waived by an option or refused loudly with
-        // its own remediation (Delta readers below a table's protocol
-        // refuse the same way).
-        val waived: Set[String] =
-          (if (java.lang.Boolean.parseBoolean(map.get("ignoreDeletionVectors")) ||
-              java.lang.Boolean.parseBoolean(map.get("ignoreChanges")) ||
-              java.lang.Boolean.parseBoolean(map.get("readChangeFeed")))
-            Set("deletion-vectors")
-          else Set.empty[String]) ++
-            // type-widening IS applied by path reads: inferSchema
-            // serves the tracked schema (latest) or schemaAt(v) (time
-            // travel), under which the parquet reader upcasts narrow
-            // footers natively — no bare footer-merge ever happens
-            Set("type-widening")
-        val blocked = inc.readerFeaturesAt(v) -- waived
-        if (blocked.nonEmpty) {
-          val why = blocked.toSeq.sorted.map {
-            case "column-mapping" =>
-              "uses column mapping (renamed or dropped columns), which " +
-                "path-level reads cannot apply. Read via " +
-                "IncrementalTable.snapshot()/scan(), or run " +
-                "OPTIMIZE/compact() to materialize the mapping into the files"
-            case "deletion-vectors" =>
-              "carries deletion vectors, which path-level reads cannot " +
-                "apply. Run OPTIMIZE to materialize them, read via " +
-                "IncrementalTable.snapshot()/scan(), or set " +
-                "option(\"ignoreDeletionVectors\", \"true\") to knowingly " +
-                "include deleted rows"
-            case f =>
-              s"requires reader feature '$f' that this graft version does " +
-                "not support — upgrade the reader"
-          }
-          throw new IllegalStateException(
-            s"graft: version $v of $root " + why.mkString("; and "))
+      // GENERIC feature gate: a bare path list can apply NO reader
+      // feature — column mapping would show stale names, deletion
+      // vectors would resurrect deleted rows, and a future feature
+      // could do anything. Every feature the version demands must be
+      // either explicitly waived by an option or refused loudly with
+      // its own remediation (Delta readers below a table's protocol
+      // refuse the same way).
+      val waived: Set[String] =
+        (if (java.lang.Boolean.parseBoolean(map.get("ignoreDeletionVectors")) ||
+            java.lang.Boolean.parseBoolean(map.get("ignoreChanges")) ||
+            java.lang.Boolean.parseBoolean(map.get("readChangeFeed")))
+          Set("deletion-vectors")
+        else Set.empty[String]) ++
+          // type-widening IS applied by path reads: inferSchema
+          // serves the tracked schema (latest) or schemaAt(v) (time
+          // travel), under which the parquet reader upcasts narrow
+          // footers natively — no bare footer-merge ever happens
+          Set("type-widening")
+      val blocked = inc.readerFeaturesAt(v) -- waived
+      if (blocked.nonEmpty) {
+        val why = blocked.toSeq.sorted.map {
+          case "column-mapping" =>
+            "uses column mapping (renamed or dropped columns), which " +
+              "path-level reads cannot apply. Read via " +
+              "IncrementalTable.snapshot()/scan(), or run " +
+              "OPTIMIZE/compact() to materialize the mapping into the files"
+          case "deletion-vectors" =>
+            "carries deletion vectors, which path-level reads cannot " +
+              "apply. Run OPTIMIZE to materialize them, read via " +
+              "IncrementalTable.snapshot()/scan(), or set " +
+              "option(\"ignoreDeletionVectors\", \"true\") to knowingly " +
+              "include deleted rows"
+          case f =>
+            s"requires reader feature '$f' that this graft version does " +
+              "not support — upgrade the reader"
         }
-        // optional stats-based file skipping: option("skipWhere", "<sql
-        // predicate>") prunes by footer min/max BEFORE the scan. The
-        // option is a pruning hint only — apply the same predicate via
-        // .filter for row-level semantics.
-        val picked = Option(map.get("skipWhere")) match {
-          case Some(sql) if sql.trim.nonEmpty =>
-            val e = sparkSession.sessionState.sqlParser.parseExpression(sql)
-            val kept = inc.prunedFiles(inc.files(v),
-              Seq(org.apache.spark.sql.graftbridge.ColumnBridge.column(e)))
-            // when stats prove EVERY file out, keep one arbitrary file:
-            // an empty path list would fail parquet schema inference,
-            // and skipWhere is a pruning hint only — the caller applies
-            // the row filter, so the extra file changes no results
-            if (kept.isEmpty) inc.files(v).take(1) else kept
-          case _ => inc.files(v)
-        }
-        picked.map {
-          case f if f.startsWith("ext:") => f.stripPrefix("ext:")
-          case f => s"${root.stripSuffix("/")}/data/$f"
-        }
-      } else {
-        val v = resolve(vt.latestVersion, vt.versionExists, vt.versionAsOfTimestamp)
-        Seq(s"${root.stripSuffix("/")}/v=$v")
+        throw new IllegalStateException(
+          s"graft: version $v of $root " + why.mkString("; and "))
+      }
+      // optional stats-based file skipping: option("skipWhere", "<sql
+      // predicate>") prunes by footer min/max BEFORE the scan. The
+      // option is a pruning hint only — apply the same predicate via
+      // .filter for row-level semantics.
+      val picked = Option(map.get("skipWhere")) match {
+        case Some(sql) if sql.trim.nonEmpty =>
+          val e = sparkSession.sessionState.sqlParser.parseExpression(sql)
+          val kept = inc.prunedFiles(inc.files(v),
+            Seq(org.apache.spark.sql.graftbridge.ColumnBridge.column(e)))
+          // when stats prove EVERY file out, keep one arbitrary file:
+          // an empty path list would fail parquet schema inference,
+          // and skipWhere is a pruning hint only — the caller applies
+          // the row filter, so the extra file changes no results
+          if (kept.isEmpty) inc.files(v).take(1) else kept
+        case _ => inc.files(v)
+      }
+      picked.map {
+        case f if f.startsWith("ext:") => f.stripPrefix("ext:")
+        case f => s"${root.stripSuffix("/")}/data/$f"
       }
     }
   }
@@ -363,8 +331,8 @@ private[sources] class GraftVersionedParquet extends ParquetDataSourceV2 {
 /** Read-only facade over the delegate's ParquetTable: dropping the
   * write capabilities makes `DataFrameWriter` fall back to the v1
   * `CreatableRelationProvider`, which owns the manifest commit.
-  * Incremental-layout tables additionally advertise MICRO_BATCH_READ:
-  * their scans serve batch reads through the parquet delegate and
+  * A path that holds a table additionally advertises MICRO_BATCH_READ:
+  * its scans serve batch reads through the parquet delegate and
   * micro-batch reads through [[GraftMicroBatchStream]] (the DSv2
   * commit-log tail).
   */
@@ -395,7 +363,7 @@ private[sources] class GraftReadOnlyTable(
 }
 
 /** Catalog-resolved tables additionally support SQL INSERT: the
-  * [[graft.sources.GraftCatalog]] wraps incremental-layout tables in
+  * [[graft.sources.GraftCatalog]] wraps latest-version tables in
   * this facade, whose `V1_BATCH_WRITE` bridges `INSERT INTO lake.t`
   * (append commit) and `INSERT OVERWRITE lake.t` (snapshot commit)
   * onto the SAME manifest protocol as every other writer — atomic,

@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.scd.{ScdConfig, ScdTable}
+import graft.scd.ScdConfig
 
 /** Input/output records for [[Streams.sessionize]]. */
 final case class SessionEvent(user_id: Long, ts_utc: Timestamp, value: Double)
@@ -28,31 +28,19 @@ private[streaming] final case class SessionState(
   */
 object Streams {
 
-  /** `writeStream.foreachBatch` sink maintaining an SCD table.
+  /** `writeStream.foreachBatch` sink maintaining an
+    * [[graft.lake.IncrementalScdTable]]. Each micro-batch costs
+    * O(touched buckets): a manifest-committed file swap of only the
+    * buckets the batch's keys hash to, with the identity watermark
+    * riding the manifest.
     *
     * The per-batch clock is `baseClock + batchId` seconds: strictly
-    * monotonic across batches (the algorithm's precondition, see
-    * ScdTable.applyScd) and deterministic under micro-batch replay —
-    * a batch re-run after a failure re-stamps the SAME timestamps, so
-    * the sink stays idempotent exactly like the reference's
-    * duplicate-row no-op path.
-    */
-  def scdSink(table: ScdTable, cfg: ScdConfig, baseClock: Instant)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    table.applyScd(batch,
-      cfg.copy(clock = () => baseClock.plusSeconds(batchId)))
-  }
-
-  /** [[scdSink]]'s SCALE twin: the same monotonic per-batch clock
-    * contract driving an [[graft.lake.IncrementalScdTable]] — each
-    * micro-batch costs O(touched buckets) (manifest-committed file
-    * swap of only the buckets the batch's keys hash to, identity
-    * watermark riding the manifest), so a continuously-maintained
-    * dimension stays viable at 100 TB where [[scdSink]]'s full-table
-    * rewrite per batch would not. Replay-idempotent in STATE exactly
-    * like the reference's duplicate-row no-op path: a re-run batch
+    * monotonic across batches (the forward-moving-clock precondition of
+    * [[graft.lake.IncrementalScdTable.applyScd]]) and deterministic
+    * under micro-batch replay — a batch re-run after a failure
     * re-stamps the SAME timestamps, the split finds nothing changed,
-    * and the snapshot is value-identical.
+    * and the snapshot is value-identical, exactly like the reference's
+    * duplicate-row no-op path.
     */
   def incrementalScdSink(table: graft.lake.IncrementalScdTable,
       cfg: ScdConfig, baseClock: Instant): (DataFrame, Long) => Unit =

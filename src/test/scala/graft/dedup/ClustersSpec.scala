@@ -17,6 +17,28 @@ class ClustersSpec extends AnyFunSuite with SparkSpec {
     finally spark.conf.unset("graft.cc.localEdgeThreshold")
   }
 
+  test("a malformed or negative graft.cc.localEdgeThreshold fails naming the conf") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L)).toDF("a", "b")
+    for (bad <- Seq("abc", "-1", "1.5", "2147483647")) {
+      spark.conf.set("graft.cc.localEdgeThreshold", bad)
+      try {
+        val e = intercept[IllegalArgumentException](
+          Clusters.connectedComponents(pairs, "a", "b"))
+        assert(e.getMessage.contains("graft.cc.localEdgeThreshold") &&
+          e.getMessage.contains("0 disables") && e.getMessage.contains(s"'$bad'"),
+          e.getMessage)
+      } finally spark.conf.unset("graft.cc.localEdgeThreshold")
+    }
+    // the accepted range still runs: 0 (distributed) and a small budget
+    for (ok <- Seq("0", " 5 ")) {
+      spark.conf.set("graft.cc.localEdgeThreshold", ok)
+      try assert(Clusters.connectedComponents(pairs, "a", "b")
+        .as[(Long, Long)].collect().toSet === Set((1L, 1L), (2L, 1L)))
+      finally spark.conf.unset("graft.cc.localEdgeThreshold")
+    }
+  }
+
   test("connected components: chains, singleton pairs, disjoint groups") {
     import spark.implicits._
     // components: {1,2,3,4} (chain), {10,11}, {20,21,22} (star on 21)

@@ -8,11 +8,11 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
-import graft.scd.{ScdConfig, ScdTable}
+import graft.scd.{ScdApply, ScdConfig}
 
 /** SCD over manifest-committed incremental files: state equivalence
-  * with the plain table, file-reference carry-over for untouched
-  * buckets, time travel across batches, vacuum.
+  * with the reference's merges over an unbucketed table, file-reference
+  * carry-over for untouched buckets, time travel across batches, vacuum.
   */
 class IncrementalScdTableSpec extends AnyFunSuite with SparkSpec {
 
@@ -73,30 +73,37 @@ class IncrementalScdTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("incremental apply equals the plain table's state; time travel works") {
+    // the "plain" state: the reference's delta_merge port folded over
+    // one unbucketed snapshot, batch by batch
     val dir = Files.createTempDirectory("iscd").toString
-    val plain = new ScdTable(spark, s"$dir/plain")
     val inc = new IncrementalScdTable(spark, s"$dir/inc", numBuckets = 8)
-    plain.create(schema); inc.create(schema)
+    inc.create(schema)
 
     val batches = Seq(
       batch((1L, "a"), (2L, "b"), (3L, "c"), (17L, "q")),
       batch((1L, "a2"), (3L, "c"), (99L, "z")),
       batch((2L, "b9"), (99L, "z2"), (1L, "a2")))
-    val versions = batches.zipWithIndex.map { case (b, i) =>
-      plain.applyScd(b, at(i + 1)); inc.applyScd(b, at(i + 1))
+    val plain = batches.zipWithIndex.foldLeft(inc.snapshot()) {
+      case (state, (b, i)) => ScdApply.viaMerges(state, b, at(i + 1)).next.localCheckpoint()
     }
+    val versions = batches.zipWithIndex.map { case (b, i) => inc.applyScd(b, at(i + 1)) }
     assert(versions === Seq(0L, 1L, 2L))
 
     val cols = schema.fieldNames.map(org.apache.spark.sql.functions.col)
-    val p = plain.snapshot().select(cols: _*).orderBy("k", "effective_from").collect()
+    val p = plain.select(cols: _*).orderBy("k", "effective_from").collect()
     val q = inc.snapshot().select(cols: _*).orderBy("k", "effective_from").collect()
     assert(q.toSeq === p.toSeq)
     assert(p.nonEmpty)
 
-    // time travel: version 0 has only batch-1 keys, all active
+    // time travel: version 0 has only batch-1 keys, all active — the
+    // day-1 dimension as the reference's CTAS day snapshot kept it
     val v0 = inc.snapshotAt(0L)
     assert(v0.select("k").distinct().count() === 4L)
     assert(v0.filter(org.apache.spark.sql.functions.col("record_status") =!= "A").count() === 0L)
+    assert(v0.filter("k = 1").select("v").head().getString(0) === "a")
+    // one history entry per batch, newest first
+    assert(inc.table.history().collect().map(_.getLong(0)).toSeq === Seq(2L, 1L, 0L))
+    assert(inc.table.history().collect().forall(_.getString(1).startsWith("scd_apply[")))
   }
 
   test("untouched buckets' files are re-referenced, not rewritten") {

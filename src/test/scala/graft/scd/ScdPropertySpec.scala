@@ -10,6 +10,7 @@ import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.lake.IncrementalScdTable
 
 /** Property-based SCD invariants (SURVEY.md §5): for ANY sequence of
   * single-row-per-key batches applied with a monotonic clock —
@@ -18,6 +19,7 @@ import graft.SparkSpec
   *     effective_from) and non-overlapping;
   *  3. replaying the final batch is a byte-level no-op;
   *  4. hash keys are stable (same values ⇒ same scd_key/upd_key).
+  * Each sequence runs into a fresh 8-bucket [[IncrementalScdTable]].
   */
 class ScdPropertySpec extends AnyFunSuite with SparkSpec {
 
@@ -50,7 +52,7 @@ class ScdPropertySpec extends AnyFunSuite with SparkSpec {
   test("invariants hold for arbitrary batch sequences") {
     val prop = Prop.forAll(Gen.listOfN(4, batchGen)) { batches =>
       val dir = Files.createTempDirectory("scd_prop").toString
-      val table = new ScdTable(spark, s"$dir/t")
+      val table = new IncrementalScdTable(spark, s"$dir/t", numBuckets = 8)
       table.create(targetSchema)
       batches.zipWithIndex.foreach { case (b, i) =>
         table.applyScd(toDf(b, i),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
-import graft.lake.VersionedTable
+import graft.lake.IncrementalTable
 
 /** `spark.read.format("graft")`: manifest-resolved version reads with
   * Delta-style versionAsOf / timestampAsOf, delegating bytes to the
@@ -14,19 +14,19 @@ import graft.lake.VersionedTable
   */
 class GraftDataSourceSpec extends AnyFunSuite with SparkSpec {
 
-  private def freshTable(): (VersionedTable, String) = {
-    val dir = Files.createTempDirectory("graft_dsv2_").toString
-    (new VersionedTable(spark, dir), dir)
+  private def freshTable(): (IncrementalTable, String) = {
+    val dir = Files.createTempDirectory("graft_dsv2_").toString + "/t"
+    (new IncrementalTable(spark, dir), dir)
   }
 
   test("latest read, versionAsOf, and timestampAsOf resolve through manifests") {
     import spark.implicits._
-    val (vt, dir) = freshTable()
-    vt.write(Seq((1L, "v0")).toDF("id", "tag"))
+    val (t, dir) = freshTable()
+    t.writeSnapshot(Seq((1L, "v0")).toDF("id", "tag"))
     Thread.sleep(20)
     val tsBetween = System.currentTimeMillis()
     Thread.sleep(20)
-    vt.write(Seq((1L, "v1"), (2L, "v1")).toDF("id", "tag"))
+    t.writeSnapshot(Seq((1L, "v1"), (2L, "v1")).toDF("id", "tag"))
 
     val latest = spark.read.format("graft").load(dir)
     assert(latest.count() === 2L)
@@ -42,20 +42,30 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkSpec {
 
   test("uncommitted version directories stay invisible") {
     import spark.implicits._
-    val (vt, dir) = freshTable()
-    vt.write(Seq((1L, "committed")).toDF("id", "tag"))
-    // a crashed writer: data directory exists, manifest never landed
-    Seq((99L, "orphan")).toDF("id", "tag")
-      .write.parquet(s"$dir/v=1")
+    val (t, dir) = freshTable()
+    t.writeSnapshot(Seq((1L, "committed")).toDF("id", "tag"))
+    // crashed writers: a staged directory that was never published, a
+    // data file no manifest references, and a half-written manifest
+    Seq((98L, "staged")).toDF("id", "tag").write.parquet(s"$dir/_stage/dead")
+    Seq((99L, "orphan")).toDF("id", "tag").coalesce(1)
+      .write.parquet(s"$dir/_stage/orphan")
+    val orphan = new java.io.File(s"$dir/_stage/orphan").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(orphan.toPath,
+      java.nio.file.Paths.get(s"$dir/data/orphan-0.parquet"))
+    Files.writeString(java.nio.file.Paths.get(
+      s"$dir/_log/_tmp_00000000000000000001.json"), "{\"version\":1}")
+    assert(t.latestVersion === Some(0L))
     val seen = spark.read.format("graft").load(dir)
     assert(seen.select("tag").as[String].collect().toSeq === Seq("committed"))
+    assert(t.history().count() === 1L)
   }
 
   test("missing version and empty table fail loudly") {
     import spark.implicits._
-    val (vt, dir) = freshTable()
+    val (t, dir) = freshTable()
     assertThrows[Exception](spark.read.format("graft").load(dir).collect())
-    vt.write(Seq((1L, "x")).toDF("id", "tag"))
+    t.writeSnapshot(Seq((1L, "x")).toDF("id", "tag"))
     assertThrows[Exception](
       spark.read.format("graft").option("versionAsOf", "7").load(dir).collect())
   }
@@ -67,8 +77,8 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkSpec {
       .write.format("graft").mode("overwrite").save(dir)
     Seq((2L, "b")).toDF("id", "tag")
       .write.format("graft").mode("append").save(dir)
-    val vt = new VersionedTable(spark, dir)
-    assert(vt.latestVersion === Some(1L))
+    val t = new IncrementalTable(spark, dir)
+    assert(t.latestVersion === Some(1L))
     assert(spark.read.format("graft").load(dir)
       .as[(Long, String)].collect().toSet === Set((1L, "a"), (2L, "b")))
     assert(spark.read.format("graft").option("versionAsOf", "0").load(dir)
@@ -76,9 +86,36 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkSpec {
     // ignore: no new version; errorIfExists: throws
     Seq((9L, "z")).toDF("id", "tag")
       .write.format("graft").mode("ignore").save(dir)
-    assert(vt.latestVersion === Some(1L))
+    assert(t.latestVersion === Some(1L))
     assertThrows[Exception](Seq((9L, "z")).toDF("id", "tag")
       .write.format("graft").mode("errorifexists").save(dir))
+  }
+
+  test("a save to a fresh path creates a table that time-travels and streams") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_dsv2_fresh_").toString + "/t"
+    Seq((1L, "a")).toDF("id", "tag")
+      .write.format("graft").mode("overwrite").save(dir)
+    val t = new IncrementalTable(spark, dir)
+    assert(t.exists && t.latestVersion === Some(0L))
+    Seq((2L, "b")).toDF("id", "tag")
+      .write.format("graft").mode("append").save(dir)
+    assert(spark.read.format("graft").option("versionAsOf", "0").load(dir)
+      .as[(Long, String)].collect().toSeq === Seq((1L, "a")))
+    // the connector-made table is a streaming source like any other
+    val q = spark.readStream.format("graft").load(dir).writeStream
+      .format("memory").queryName("graft_fresh_stream")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination(60000) finally q.stop()
+    assert(spark.table("graft_fresh_stream").as[(Long, String)].collect().toSet ===
+      Set((1L, "a"), (2L, "b")))
+    // replaceWhere needs an existing table: a fresh path fails loudly
+    val fresh = Files.createTempDirectory("graft_dsv2_fresh_rw_").toString + "/t"
+    val e = intercept[IllegalArgumentException](Seq((3L, "c")).toDF("id", "tag")
+      .write.format("graft").mode("overwrite").option("replaceWhere", "id = 3").save(fresh))
+    assert(e.getMessage.contains("append first"), e.getMessage)
+    assert(!new IncrementalTable(spark, fresh).exists)
   }
 
   test("reads incremental-manifest tables with the same time-travel options") {
@@ -98,8 +135,8 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkSpec {
     val dir = Files.createTempDirectory("graft_dsv2_incw_").toString + "/t"
     val it = new graft.lake.IncrementalTable(spark, dir)
     it.writeSnapshot(Seq((1L, "a")).toDF("id", "tag"))
-    // a save through the connector must NOT publish a VersionedTable
-    // manifest into the shared _log (that would brick incremental reads)
+    // a save through the connector commits through the table's own
+    // manifest protocol: one new version per save
     Seq((2L, "b")).toDF("id", "tag")
       .write.format("graft").mode("append").save(dir)
     assert(it.latestVersion === Some(1L))
@@ -149,8 +186,8 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkSpec {
 
   test("predicate pushdown reaches the parquet scan through the connector") {
     import spark.implicits._
-    val (vt, dir) = freshTable()
-    vt.write((0L until 100L).map(i => (i, s"t$i")).toDF("id", "tag"))
+    val (t, dir) = freshTable()
+    t.writeSnapshot((0L until 100L).map(i => (i, s"t$i")).toDF("id", "tag"))
     val q = spark.read.format("graft").load(dir).filter(col("id") > 90)
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [IsNotNull(id), GreaterThan(id,90)"),

@@ -176,11 +176,11 @@ class GraftStreamSourceSpec extends AnyFunSuite with SparkSpec {
       s"expected the DSv2 stream, saw: $sources")
   }
 
-  test("streaming a non-incremental (versioned) table fails loudly") {
+  test("streaming a plain parquet directory fails loudly") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_stream_vt_").toString + "/t"
-    new graft.lake.VersionedTable(spark, dir)
-      .write(Seq((1L, "a")).toDF("id", "tag"))
+    val dir = Files.createTempDirectory("graft_stream_pq_").toString + "/t"
+    // parquet files but no commit log: there is no table to tail
+    Seq((1L, "a")).toDF("id", "tag").write.parquet(dir)
     assertThrows[Exception](
       spark.readStream.format("graft").load(dir))
   }
