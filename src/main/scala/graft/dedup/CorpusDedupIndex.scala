@@ -283,7 +283,7 @@ class CorpusDedupIndex(
 
 object CorpusDedupIndex {
   /** The [[graft.lake.IncrementalView]] driver-predicate rule: a value
-    * set at most this large becomes an `isin` the stats store can
+    * set at most this large becomes an `isin` the file stats can
     * prune files with; anything larger falls back to a full scan of
     * the (narrow) index table.
     */

@@ -809,7 +809,7 @@ object ScaleEvidence {
 
     /** Experiment: metadata-only aggregate pushdown vs table size. A
       * global `count(*) / min / max` over an unfiltered graft scan is
-      * answered from the one-row-per-file stats sidecar
+      * answered from the manifest's per-file stats
       * (`GraftStatsLocalScan` — zero tasks, zero data files); the
       * conf-off foil scans the table. Pushdown cost is O(files)
       * metadata; the foil is O(rows) — at 100 TB the difference
@@ -855,10 +855,10 @@ object ScaleEvidence {
     }
 
     def statsAggExperiment(base: java.nio.file.Path, k: Int): Unit = {
-      // 20M rows/scale: the pushdown's cost is a FIXED ~0.4 s of
-      // driver-side metadata work (one job over the 32-row stats
-      // store), so the toy 2M base drowns the foil's linear term in
-      // job-launch noise — at 200M rows the shapes separate cleanly
+      // 20M rows/scale: the pushdown's cost is FIXED driver-side
+      // metadata work over 32 file entries, so the toy 2M base drowns
+      // the foil's linear term in noise — at 200M rows the shapes
+      // separate cleanly
       val n = 20000000L * k
       val dir = s"$base/sagg_x$k/t"
       val t = new graft.lake.IncrementalTable(spark, dir)

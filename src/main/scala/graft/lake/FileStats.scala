@@ -6,69 +6,58 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Per-file column statistics for manifest-level data skipping — the
-  * Delta/Iceberg "stats in the commit log" idea: each data file's
+  * Delta "stats in the commit log" idea: each data file's
   * min/max/null-count per column is harvested from its parquet FOOTER
-  * at commit time (metadata-only read, no data scan), persisted next to
-  * the manifests, and queries prune the file list BEFORE the engine
+  * at commit time (metadata-only read, no data scan) into that file's
+  * manifest entry, and queries prune the file list BEFORE the engine
   * scan by rewriting their predicate into a "can this file possibly
-  * match" test over (min, max, nulls).
+  * match" test over (min, max, nulls), evaluated on the driver per
+  * entry — no Spark job, no I/O beyond the manifests. Files without
+  * stats (or with a NULL bound) are always kept — skipping is an
+  * over-approximation, never a filter.
   *
-  * At 100 TB the prune runs as a Spark filter over the stats table
-  * (one row per file), so skipping scales with file COUNT, never data
-  * size; a selective predicate turns a full-table scan into reading a
-  * handful of files. Files with no stats row (or a NULL bound) are
-  * always kept — skipping is an over-approximation, never a filter.
-  *
-  * The reference platform gets this from Delta's add-file stats; this
-  * is the plain-Spark re-derivation (SURVEY.md §2.1 S4's commit-log
-  * layering).
+  * An entry has Delta's add-action stats shape,
+  * `{"numRecords":n,"minValues":{..},"maxValues":{..},"nullCount":{..}}`,
+  * keyed by PHYSICAL column name. Values are type-free JSON (integers,
+  * dates as epoch days, timestamps as epoch micros, floats as doubles,
+  * strings) typed only when read, so a type widening needs no rewrite.
   */
 object FileStats {
+  import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+  import com.fasterxml.jackson.databind.node.ObjectNode
+
+  private val mapper = new ObjectMapper()
+
+  /** One file's stats entry (see the object doc for its shape). */
+  type Entry = JsonNode
 
   /** Columns eligible for skipping stats. Timestamps ride along when
     * parquet wrote them as INT64 micros (Spark's TIMESTAMP_MICROS);
     * INT96 footers carry no usable stats and degrade to NULL = no skip.
     */
-  private def supported(f: StructField): Boolean = f.dataType match {
+  private[lake] def supported(f: StructField): Boolean = f.dataType match {
     case IntegerType | LongType | FloatType | DoubleType | StringType |
          DateType | TimestampType | TimestampNTZType | ShortType | ByteType => true
     case _ => false
   }
 
-  /** Wide stats schema for a table schema: one row per file,
-    * `min_<c>`/`max_<c>` in the column's own type so predicate
-    * rewriting stays typed, plus null and row counts.
+  /** Read one parquet footer and produce the file's stats entry for the
+    * supported columns of `table` (physical names). Conservative
+    * throughout: anything surprising leaves the bound out (= keep the
+    * file).
     */
-  def statsSchema(table: StructType): StructType = {
-    val per = table.fields.filter(supported).flatMap { f =>
-      Seq(StructField(s"min_${f.name}", f.dataType),
-        StructField(s"max_${f.name}", f.dataType),
-        StructField(s"nulls_${f.name}", LongType))
-    }
-    StructType(StructField("file", StringType) +:
-      StructField("num_rows", LongType) +: per.toSeq)
-  }
-
-  /** Read one parquet footer and produce the file's stats row values
-    * keyed by table column name: (min, max, nullCount). Conservative
-    * throughout: anything surprising becomes NULL (= keep the file).
-    */
-  private def footerStats(
-      conf: Configuration, absPath: String, table: StructType)
-      : (Long, Map[String, (Any, Any, Any)]) = {
+  def harvest(conf: Configuration, absPath: String, table: StructType): ObjectNode = {
     val wanted = table.fields.filter(supported).map(f => f.name -> f.dataType).toMap
     val reader = ParquetFileReader.open(
       HadoopInputFile.fromPath(new Path(absPath), conf))
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val numRows = blocks.map(_.getRowCount).sum
       // aggregate chunk stats across row groups per top-level column
       val acc = scala.collection.mutable.Map.empty[String, (Any, Any, Long, Boolean)]
       for (b <- blocks; c <- b.getColumns.asScala) {
@@ -91,44 +80,44 @@ object FileStats {
           }
         }
       }
-      val out = acc.toMap.map { case (name, (mn, mx, nulls, ok)) =>
-        // a single stats-less chunk poisons the whole file's bounds
-        name -> (if (ok) (mn, mx, nulls: Any) else (null, null, null))
+      val entry = mapper.createObjectNode()
+      entry.put("numRecords", blocks.map(_.getRowCount).sum)
+      val mins = entry.putObject("minValues")
+      val maxs = entry.putObject("maxValues")
+      val nullCounts = entry.putObject("nullCount")
+      // a single stats-less chunk poisons the whole file's bounds
+      for ((name, (mn, mx, nulls, ok)) <- acc if ok) {
+        if (mn != null) mins.set[JsonNode](name, mapper.valueToTree[JsonNode](mn))
+        if (mx != null) maxs.set[JsonNode](name, mapper.valueToTree[JsonNode](mx))
+        nullCounts.put(name, nulls)
       }
-      (numRows, out)
+      entry
     } finally reader.close()
   }
 
-  /** Parquet footer value → Spark external value (typed like the stats
-    * schema column). NULL when the conversion isn't trustworthy.
+  /** Parquet footer value → the JSON-native bound (Long, Double or
+    * String) for a column of type `dt`. NULL when the conversion isn't
+    * trustworthy.
     */
   private def convert(v: Any, dt: DataType): Any = (v, dt) match {
     case (null, _) => null
-    case (i: java.lang.Integer, IntegerType) => i
-    case (i: java.lang.Integer, ShortType) => i.shortValue()
-    case (i: java.lang.Integer, ByteType) => i.byteValue()
-    case (l: java.lang.Long, LongType) => l
-    case (f: java.lang.Float, FloatType) => f
+    // int32 physical: ints, narrow ints, dates (epoch days) — and a
+    // narrow file harvested under a WIDENED table schema
+    case (i: java.lang.Integer, IntegerType | ShortType | ByteType | LongType | DateType) =>
+      java.lang.Long.valueOf(i.longValue)
+    // int64 physical: longs and TIMESTAMP_MICROS (with or without zone)
+    case (l: java.lang.Long, LongType | TimestampType | TimestampNTZType) => l
+    // floats ride as their exact double value; NaN and infinities have
+    // no JSON form and are left out (= no skip on that bound)
+    case (f: java.lang.Float, FloatType | DoubleType) if f.isNaN || f.isInfinite => null
+    case (f: java.lang.Float, FloatType | DoubleType) => java.lang.Double.valueOf(f.doubleValue)
+    case (d: java.lang.Double, DoubleType) if d.isNaN || d.isInfinite => null
     case (d: java.lang.Double, DoubleType) => d
-    // widening promotions: a narrow file harvested under a WIDENED
-    // table schema (post type-widening) upcasts losslessly
-    case (i: java.lang.Integer, LongType) => i.longValue()
-    case (f: java.lang.Float, DoubleType) => f.doubleValue()
     case (b: org.apache.parquet.io.api.Binary, StringType) =>
       val s = b.toStringUsingUTF8
       // parquet orders binaries by unsigned bytes; that matches
       // String ordering only for ASCII — degrade to NULL otherwise
       if (s.forall(_ < 128)) s else null
-    case (i: java.lang.Integer, DateType) =>
-      java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(i.longValue()))
-    case (l: java.lang.Long, TimestampType) => // TIMESTAMP_MICROS
-      java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-        Math.floorDiv(l, 1000000L), Math.floorMod(l, 1000000L) * 1000L))
-    case (l: java.lang.Long, TimestampNTZType) => // INT64 micros, no zone
-      java.time.LocalDateTime.ofEpochSecond(
-        Math.floorDiv(l, 1000000L),
-        (Math.floorMod(l, 1000000L) * 1000L).toInt,
-        java.time.ZoneOffset.UTC)
     case _ => null
   }
 
@@ -139,33 +128,86 @@ object FileStats {
   private def maxOf(a: Any, b: Any): Any =
     if (a == null || b == null) null else if (cmp(a, b) >= 0) a else b
 
-  /** Stats rows (statsSchema layout) for the given (manifest-relative
-    * name, absolute path) files — footer reads only.
+  def parse(json: String): JsonNode = mapper.readTree(json)
+
+  /** The `"stats"` object of a manifest: file → entry, in name order
+    * (an entry's own JSON is its `toString`).
     */
-  def collect(
-      spark: SparkSession, table: StructType,
-      files: Seq[(String, String)]): DataFrame = {
-    val schema = statsSchema(table)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val statCols = table.fields.filter(supported).map(_.name)
-    val rows: Seq[Row] = files.map { case (rel, abs) =>
-      val (numRows, byCol) = footerStats(conf, abs, table)
-      val per = statCols.flatMap { c =>
-        val (mn, mx, nulls) = byCol.getOrElse(c, (null, null, null))
-        Seq(mn, mx, nulls)
+  def statsJson(entries: Seq[(String, JsonNode)]): String = {
+    val o = mapper.createObjectNode()
+    entries.sortBy(_._1).foreach { case (f, e) => o.set[JsonNode](f, e) }
+    o.toString
+  }
+
+  /** A file's physical row count, if its entry carries one. */
+  def numRecords(entry: JsonNode): Option[Long] =
+    Option(entry.get("numRecords")).map(integral(_, "numRecords"))
+
+  /** A file's null count for physical column `c`, if known. */
+  def nullCount(entry: JsonNode, c: String): Option[Long] =
+    Option(entry.path("nullCount").get(c)).map(integral(_, s"nullCount.$c"))
+
+  /** A file's min (or max) bound for physical column `c` as a Catalyst
+    * INTERNAL value of type `dt`; None when unknown. Throws on a value
+    * that does not fit `dt` (a malformed entry).
+    */
+  def bound(entry: JsonNode, c: String, isMax: Boolean, dt: DataType): Option[Any] =
+    Option(entry.path(if (isMax) "maxValues" else "minValues").get(c))
+      .filterNot(_.isNull).map { n =>
+        def bad = new IllegalStateException(
+          s"malformed stats bound $c=$n for type ${dt.simpleString}")
+        def int(fits: Int => Boolean): Int =
+          if (n.isIntegralNumber && n.canConvertToInt && fits(n.intValue)) n.intValue
+          else throw bad
+        dt match {
+          case IntegerType | DateType => int(_ => true)
+          case ShortType => int(_.isValidShort).toShort
+          case ByteType => int(_.isValidByte).toByte
+          case LongType | TimestampType | TimestampNTZType => integral(n, c)
+          case FloatType if n.isNumber => n.doubleValue.toFloat
+          case DoubleType if n.isNumber => n.doubleValue
+          case StringType if n.isTextual =>
+            org.apache.spark.unsafe.types.UTF8String.fromString(n.textValue)
+          case _ => throw bad
+        }
       }
-      Row.fromSeq(rel +: (numRows: Any) +: per.toSeq)
-    }
-    spark.createDataFrame(rows.asJava, schema)
+
+  private def integral(n: JsonNode, what: String): Long =
+    if (n.isIntegralNumber && n.canConvertToLong) n.longValue
+    else throw new IllegalStateException(s"malformed stats value $what=$n")
+
+  /** Driver-side file test for analyzed filter conditions over the
+    * stat columns `cols` = (logical name, physical name, type): their
+    * [[pruneExpr]] rewrites, bound to one in-memory row per entry.
+    * True (or NULL) = the file may hold a matching row.
+    */
+  def possiblyMatches(
+      cols: Seq[(String, String, DataType)],
+      conditions: Seq[Expression]): JsonNode => Boolean = {
+    // the row: num_rows, then (min, max, nulls) per column
+    val layout: Seq[(String, DataType, JsonNode => Any)] =
+      ("num_rows", LongType, (e: JsonNode) => numRecords(e).getOrElse(null)) +:
+        cols.flatMap { case (l, p, dt) => Seq(
+          (s"min_$l", dt, (e: JsonNode) => bound(e, p, isMax = false, dt).orNull),
+          (s"max_$l", dt, (e: JsonNode) => bound(e, p, isMax = true, dt).orNull),
+          (s"nulls_$l", LongType, (e: JsonNode) => nullCount(e, p).getOrElse(null)))
+        }
+    val ref = layout.zipWithIndex.map { case ((n, dt, _), i) =>
+      n -> BoundReference(i, dt, nullable = true) }.toMap
+    val test = conditions.map(pruneExpr(_, cols.map(_._1).toSet, ref)).reduce(And(_, _))
+    entry => test.eval(new GenericInternalRow(layout.map(_._3(entry)).toArray)) != false
   }
 
   /** Rewrite a data predicate into its file-level "possibly matches"
     * over-approximation over the stats columns. Unrecognized shapes
     * become TRUE (keep), every leaf is NULL-tolerant (missing stats
     * keep), so pruning can only ever remove files that provably cannot
-    * contain a matching row.
+    * contain a matching row. `stat` resolves the stats columns
+    * (`min_<c>`, `max_<c>`, `nulls_<c>`, `num_rows`).
     */
-  def pruneExpr(filter: Expression, statCols: Set[String]): Expression = {
+  def pruneExpr(
+      filter: Expression, statCols: Set[String],
+      stat: String => Expression): Expression = {
     def attrName(e: Expression): Option[String] = e match {
       case a: AttributeReference if statCols.contains(a.name) => Some(a.name)
       case u: UnresolvedAttribute if u.nameParts.length == 1 &&
@@ -197,9 +239,8 @@ object FileStats {
       case _ => None
     }
     def mnx(r: BoundRef): (Expression, Expression) =
-      (r.wrap(UnresolvedAttribute.quoted(s"min_${r.col}")),
-        r.wrap(UnresolvedAttribute.quoted(s"max_${r.col}")))
-    def nulls(c: String) = UnresolvedAttribute.quoted(s"nulls_$c")
+      (r.wrap(stat(s"min_${r.col}")), r.wrap(stat(s"max_${r.col}")))
+    def nulls(c: String) = stat(s"nulls_$c")
     def keepIfUnknown(e: Expression): Expression =
       Coalesce(Seq(e, Literal.TrueLiteral))
     def eqPossible(r: BoundRef, l: Literal): Expression = {
@@ -271,8 +312,7 @@ object FileStats {
         keepIfUnknown(GreaterThan(nulls(attrName(a).get), Literal(0L)))
       // IS NOT NULL prunes all-null files (nulls == num_rows)
       case IsNotNull(a) if attrName(a).isDefined =>
-        keepIfUnknown(LessThan(nulls(attrName(a).get),
-          UnresolvedAttribute.quoted("num_rows")))
+        keepIfUnknown(LessThan(nulls(attrName(a).get), stat("num_rows")))
       // != prunes only constant files pinned to exactly that value
       case Not(EqualTo(R(r), l: Literal)) =>
         val (mn, mx) = mnx(r)
@@ -345,11 +385,4 @@ object FileStats {
           Literal.create(e.eval(null), e.dataType)
       }
     } catch { case scala.util.control.NonFatal(_) => Literal.TrueLiteral }
-
-  /** Column-facing wrapper over [[pruneExpr]]. */
-  def pruneColumn(
-      spark: SparkSession, dataSchema: StructType,
-      filter: Column, statCols: Set[String]): Column =
-    ColumnBridge.column(
-      pruneExpr(analyzedCondition(spark, dataSchema, filter), statCols))
 }

@@ -57,7 +57,7 @@ final case class DimSpec(path: String, factKey: String, dimKey: String)
   * delete in a brand-new group) flags that GROUP for recompute
   * from `fact ⋈ dims` — file-pruned through the join: the affected
   * group values select dim rows, their (bounded) key sets become
-  * `factKey IN (…)` predicates, and the stats store prunes fact files
+  * `factKey IN (…)` predicates, and the file stats prune fact files
   * (`lake_join_view_minmax` oracles the arc; the spec pins the prune).
   * More flagged groups than the predicate bound degrade to one full
   * refresh — never wrong, only slower.

@@ -2,6 +2,8 @@ package graft.lake
 
 import java.nio.charset.StandardCharsets
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -62,7 +64,6 @@ final class IncrementalTable(
 
   private val logDir = new Path(path, "_log")
   private val dataDir = new Path(path, "data")
-  private val statsDir = new Path(path, "_stats")
   private val schemasDir = new Path(path, "_schemas")
   private val changeDataDir = new Path(path, "_change_data")
   private val dvDir = new Path(path, "_dv")
@@ -94,6 +95,16 @@ final class IncrementalTable(
     }
   private def fs: FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  // once per table per JVM: a table written before stats moved into
+  // the manifest has stats-less files, which no prune can skip
+  if (IncrementalTable.legacyStatsChecked.add(path) &&
+      fs.exists(new Path(path, "_stats")))
+    log.warn(s"graft table $path predates per-file stats in the manifest: " +
+      "its older files are never pruned until compact() (SQL: OPTIMIZE) " +
+      "restages them and harvests their stats; vacuum() then deletes _stats/")
 
   // ---- schema tracking (Delta keeps the schema INSIDE the log commit;
   // doing the same — an immutable blob under _schemas/ whose name rides
@@ -248,9 +259,8 @@ final class IncrementalTable(
         // cumulative physical names): the audit trail of what changed,
         // and the marker that makes writeManifest demand the
         // `type-widening` reader feature — a pre-widening reader of
-        // this library would bare-read a mixed-width file set (or hit
-        // parquet merge refusals on the stats store), so it must
-        // refuse with the clean upgrade message instead
+        // this library would bare-read a mixed-width file set, so it
+        // must refuse with the clean upgrade message instead
         val widenedEntry =
           if (widenedCols.isEmpty) Map.empty[String, String]
           else {
@@ -331,8 +341,8 @@ final class IncrementalTable(
 
   def versionExists(v: Long): Boolean = fs.exists(manifestPath(v))
 
-  // ---- manifest io (no json library in the dependency set: the
-  // format is flat and file names are sanitized on write) ----
+  // ---- manifest io (file lists and meta are flat and sanitized on
+  // write, so they parse without a json library; stats use Jackson) ----
   //
   // A manifest carries EITHER the full file list ("files") or a DELTA
   // against the previous version ("add"/"remove") — the Delta-log
@@ -345,6 +355,9 @@ final class IncrementalTable(
   // every [[IncrementalTable.CheckpointInterval]] delta commits, so the
   // walk is bounded) and replaying the deltas forward. Pre-delta-log
   // tables read unchanged: every old manifest IS a full list.
+  // A trailing `"stats":{<file>:{...}}` object carries the footer stats
+  // of every file the manifest lists (Delta's add-action stats);
+  // checkpoints carry them per row. A stats-less file has no entry.
 
   /** Publish the manifest for `v` — the table's ATOMIC commit point.
     * The tmp name carries a writer-unique nonce (two committers racing
@@ -355,11 +368,14 @@ final class IncrementalTable(
     * `prevFiles` is an optional hint of version `v-1`'s file list (the
     * commit loops already hold it); without it the previous version is
     * reconstructed to compute the delta encoding.
+    * Stats of files new to `v` come from `knownStats` or else their
+    * footers (harvested under the commit's schema); files carried over
+    * keep `v-1`'s.
     */
-  private[lake] def writeManifest(v: Long, operation: String, files0: Seq[String],
+  private[lake] def writeManifest(v: Long, operation: String, files: Seq[String],
       meta0: Map[String, String] = Map.empty,
-      prevFiles: Option[Seq[String]] = None): Unit = {
-    val files = files0
+      prevFiles: Option[Seq[String]] = None,
+      knownStats: Map[String, FileStats.Entry] = Map.empty): Unit = {
     // stamp the version's required reader features (`rf`): KNOWN
     // features re-derive from the state this commit actually publishes
     // (so dropping the DV pointer drops its feature too); unknown
@@ -397,19 +413,30 @@ final class IncrementalTable(
     val prevOpt: Option[Seq[String]] =
       if (v > 0 && versionExists(v - 1)) Some(prevFiles.getOrElse(filesImpl(v - 1)))
       else None
-    val body = prevOpt match {
+    val prevSet = prevOpt.getOrElse(Seq.empty).toSet
+    val (body, listed) = prevOpt match {
       case Some(prev) =>
-        val prevSet = prev.toSet
         val fileSet = files.toSet
         val add = files.filterNot(prevSet)
         val remove = prev.filterNot(fileSet)
         if (add.size + remove.size < files.size)
-          s""""add":[${arr(add)}],"remove":[${arr(remove)}]"""
-        else s""""files":[${arr(files)}]"""
-      case None => s""""files":[${arr(files)}]"""
+          (s""""add":[${arr(add)}],"remove":[${arr(remove)}]""", add)
+        else (s""""files":[${arr(files)}]""", files)
+      case None => (s""""files":[${arr(files)}]""", files)
     }
+    val harvestSchema = if (!collectStats) None
+      else meta.get("schema").map(readSchemaBlob).orElse(readLegacySchemaFile())
+    lazy val prevStats = carriedStats(v - 1, "writeManifest")
+    val listedStats = listed.flatMap(f => knownStats.get(f).orElse {
+      if (prevSet(f)) prevStats.get(f)
+      else harvestSchema.map(FileStats.harvest(
+        spark.sparkContext.hadoopConfiguration, dataPath(f).toString, _))
+    }.map(f -> _))
+    val statsJson =
+      if (listedStats.isEmpty) "" else ""","stats":""" + FileStats.statsJson(listedStats)
     val json = s"""{"version":$v,"operation":"$operation",""" +
-      s""""committedAt":${System.currentTimeMillis()},""" + body + metaJson + "}"
+      s""""committedAt":${System.currentTimeMillis()},""" + body + metaJson +
+      statsJson + "}"
     fs.mkdirs(logDir)
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(logDir, f"_tmp_${nonce}_$v%020d.json")
@@ -437,16 +464,15 @@ final class IncrementalTable(
     // publishes a full-list sidecar. Best-effort AFTER the commit — a
     // failed/missing checkpoint only lengthens the walk to the previous
     // one, never changes an answer (exactly Delta's checkpoint.parquet
-    // contract). The writer has the full list in hand, so this is one
-    // extra small write, not a reconstruction.
+    // contract).
     if (v > 0 && v % IncrementalTable.CheckpointInterval == 0 &&
         body.startsWith("\"add\""))
-      try writeCheckpoint(v, files)
+      try writeCheckpoint(v, files, carriedStats(v, "writeManifest"))
       catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  /** Checkpoints are PARQUET (one `file` string column, dictionary +
-    * snappy), not JSON: at 10⁶ file entries the JSON full list is
+  /** Checkpoints are PARQUET (`file` plus its JSON `stats` entry,
+    * dictionary + snappy), not JSON: at 10⁶ file entries the JSON full list is
     * ~34 MB regex-parsed on every cold read, where the parquet form is
     * a few MB binary-decoded — the same reason Delta moved its
     * checkpoints to parquet. Written driver-side with the parquet
@@ -454,7 +480,8 @@ final class IncrementalTable(
     * like the manifests. Old `.checkpoint.json` sidecars remain
     * readable forever; new ones are only ever written as parquet.
     */
-  private def writeCheckpoint(v: Long, files: Seq[String]): Unit = {
+  private def writeCheckpoint(
+      v: Long, files: Seq[String], stats: Map[String, FileStats.Entry]): Unit = {
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.util.HadoopOutputFile
     import org.apache.parquet.hadoop.metadata.CompressionCodecName
@@ -469,8 +496,11 @@ final class IncrementalTable(
       .build()
     val gf = new org.apache.parquet.example.data.simple.SimpleGroupFactory(
       IncrementalTable.CheckpointSchema)
-    try files.sorted.foreach(f => w.write(gf.newGroup().append("file", f)))
-    finally w.close()
+    try files.sorted.foreach { f =>
+      val g = gf.newGroup().append("file", f)
+      stats.get(f).foreach(e => g.append("stats", e.toString))
+      w.write(g)
+    } finally w.close()
     if (!fs.rename(tmp, checkpointParquetPath(v))) fs.delete(tmp, false)
   }
 
@@ -481,24 +511,37 @@ final class IncrementalTable(
   /** The full list pinned at `v` — parquet sidecar preferred, legacy
     * JSON still honored (pre-round-5 tables keep reading unchanged).
     */
-  private def readCheckpointFiles(v: Long): Seq[String] = {
-    val pq = checkpointParquetPath(v)
-    if (fs.exists(pq)) {
-      import org.apache.parquet.hadoop.ParquetReader
-      import org.apache.parquet.hadoop.example.GroupReadSupport
-      val r = ParquetReader.builder(new GroupReadSupport(), pq)
-        .withConf(spark.sparkContext.hadoopConfiguration)
-        .build()
-      val buf = Seq.newBuilder[String]
-      try {
-        var g = r.read()
-        while (g != null) { buf += g.getString("file", 0); g = r.read() }
-      } finally r.close()
-      buf.result()
-    } else
+  private def readCheckpointFiles(v: Long): Seq[String] =
+    if (fs.exists(checkpointParquetPath(v)))
+      readCheckpointRows(v, withStats = false).map(_._1)
+    else
       jsonArray(readLogFile(checkpointPath(v)), "files")
         .getOrElse(throw new IllegalStateException(
           s"corrupt checkpoint $v at $path"))
+
+  /** (file, stats JSON) rows of `v`'s parquet checkpoint; a names-only
+    * read projects the stats column away.
+    */
+  private def readCheckpointRows(
+      v: Long, withStats: Boolean): Seq[(String, Option[String])] = {
+    val conf = new org.apache.hadoop.conf.Configuration(
+      spark.sparkContext.hadoopConfiguration)
+    if (!withStats)
+      conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
+        "message graft_checkpoint { required binary file (UTF8); }")
+    val r = org.apache.parquet.hadoop.ParquetReader.builder(
+      new org.apache.parquet.hadoop.example.GroupReadSupport(),
+      checkpointParquetPath(v)).withConf(conf).build()
+    val buf = Seq.newBuilder[(String, Option[String])]
+    try {
+      var g = r.read()
+      while (g != null) {
+        buf += g.getString("file", 0) -> Option.when(g.getType.containsField("stats") &&
+          g.getFieldRepetitionCount("stats") > 0)(g.getString("stats", 0))
+        g = r.read()
+      }
+    } finally r.close()
+    buf.result()
   }
 
   private def readLogFile(p: Path): String = {
@@ -524,7 +567,11 @@ final class IncrementalTable(
   private def readManifestParts(v: Long)
       : (String, Long, Option[Seq[String]], Seq[String], Seq[String]) = {
     require(versionExists(v), s"version $v does not exist at $path")
-    val txt = readLogFile(manifestPath(v))
+    parseManifestParts(v, readLogFile(manifestPath(v)))
+  }
+
+  private def parseManifestParts(v: Long, txt: String)
+      : (String, Long, Option[Seq[String]], Seq[String], Seq[String]) = {
     // the operation string may legally contain ',' (e.g. zorder[x,y]) —
     // parse the quoted value as a unit, never split on bare commas
     val op = """"operation":"([^"]*)"""".r.findFirstMatchIn(txt)
@@ -541,15 +588,18 @@ final class IncrementalTable(
       jsonArray(txt, "remove").getOrElse(Seq.empty))
   }
 
-  // version → file list is IMMUTABLE once committed, so any cache entry
-  // is correct forever; the LRU only bounds memory. Shared across the
-  // threads of a multi-writer test via the synchronized wrapper.
-  private val filesCache =
+  // version → file list (and file → stats) is IMMUTABLE once committed,
+  // so any cache entry is correct forever; the LRU only bounds memory.
+  // Shared across the threads of a multi-writer test via the
+  // synchronized wrapper.
+  private def versionCache[T]() =
     java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[Long, Seq[String]](8, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[Long, Seq[String]]): Boolean = size > 4
+      new java.util.LinkedHashMap[Long, T](8, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[Long, T]): Boolean =
+          size > 4
       })
+  private val filesCache = versionCache[Seq[String]]()
+  private val statsCache = versionCache[Map[String, FileStats.Entry]]()
 
   /** Reconstruct version `v`'s file list: walk back collecting deltas
     * until a full list (full-list commit, checkpoint sidecar, or cache
@@ -595,9 +645,32 @@ final class IncrementalTable(
     result
   }
 
-  private def readManifest(v: Long): (String, Long, Seq[String]) = {
-    val (op, ts, _, _, _) = readManifestParts(v)
-    (op, ts, filesImpl(v))
+  /** Version `v`'s file → stats map: its checkpoint's, or the stats its
+    * manifest lists (replayed over `v-1`'s for a delta). Before the
+    * stats object a manifest holds no `{` after a `"stats":` key (meta
+    * values are quote-free strings), so `"stats":{` first marks it. A
+    * file with no entry has no stats.
+    */
+  private[lake] def statsImpl(v: Long): Map[String, FileStats.Entry] = {
+    val cached = statsCache.get(v)
+    if (cached != null) return cached
+    val result =
+      if (fs.exists(checkpointParquetPath(v))) readCheckpointRows(v, withStats = true)
+        .collect { case (f, Some(j)) => f -> FileStats.parse(j) }.toMap
+      else if (fs.exists(checkpointPath(v))) Map.empty[String, FileStats.Entry] // legacy JSON
+      else {
+        require(versionExists(v), s"cannot reconstruct the stats of version $v of $path")
+        val txt = readLogFile(manifestPath(v))
+        val (_, _, full, _, remove) = parseManifestParts(v, txt)
+        val i = txt.indexOf(""""stats":{""")
+        val listed =
+          if (i < 0) Map.empty[String, FileStats.Entry]
+          else FileStats.parse(txt.substring(i + 8, txt.length - 1))
+            .properties.asScala.map(e => e.getKey -> e.getValue).toMap
+        if (full.isDefined) listed else statsImpl(v - 1) -- remove ++ listed
+      }
+    statsCache.put(v, result)
+    result
   }
 
   /** Data files (relative to `data/`) composing version `v`. */
@@ -782,8 +855,8 @@ final class IncrementalTable(
 
   /** Stats-pruned scan: drop every data file whose footer-harvested
     * (min, max, nulls) bounds prove it cannot contain a matching row,
-    * THEN read and apply the filters exactly. Pruning cost is a filter
-    * over the stats table (one row per file) — at 100 TB a selective
+    * THEN read and apply the filters exactly. Pruning is a driver-side
+    * test over the manifest's per-file stats — at 100 TB a selective
     * predicate reads a handful of files instead of the table.
     */
   def scan(filters: Column*): DataFrame = scanImpl(
@@ -810,80 +883,41 @@ final class IncrementalTable(
     filters.foldLeft(logicalize(base, v))(_ filter _)
   }
 
-  /** The subset of `all` that might satisfy every filter, per the stats
-    * table. Files without a stats row — and any stats-read trouble at
-    * all — keep the file: skipping only ever removes provable misses.
+  /** The subset of `all` that might satisfy every filter, judged by
+    * the latest version's per-file stats. Files without stats there —
+    * and any stats trouble at all — are kept: skipping only ever
+    * removes provable misses.
     */
   def prunedFiles(all: Seq[String], filters: Seq[Column]): Seq[String] =
     prunedFilesAt(latestVersion.getOrElse(return all), all, filters)
 
   /** Version-aware variant: filters arrive in version `v`'s LOGICAL
-    * column names; the stats/bloom stores speak physical. The mapping
-    * of `v` translates, so pruning stays sound across renames.
+    * column names; the manifest stats and the bloom store speak
+    * physical. The mapping of `v` translates, so pruning stays sound
+    * across renames. Runs no Spark job unless the bloom phase has
+    * point targets to probe.
     */
   private[graft] def prunedFilesAt(
       v: Long, all: Seq[String], filters: Seq[Column]): Seq[String] = {
     if (filters.isEmpty) return all
     // a crash mid-swap must not read as "no index": finish it first
-    recoverSidecar(statsDir)
-    recoverSidecar(bloomsDir)
-    if (!fs.exists(statsDir)) return all
+    recoverBlooms()
     val nameMap = colMapAt(v) // physical -> logical
     val droppedSet = droppedColsAt(v)
     try {
-      val stats0 = readStatsStore()
-      // present the stats frame under LOGICAL names so the filters'
-      // references line up (min_<phys> -> min_<logical>, etc.)
-      val stats =
-        if (nameMap.isEmpty && droppedSet.isEmpty) stats0
-        else stats0.select(stats0.columns.toSeq.collect {
-          case n if Seq("min_", "max_", "nulls_").exists(n.startsWith) =>
-            val pfx = n.takeWhile(_ != '_') + "_"
-            val phys = n.stripPrefix(pfx)
-            (phys, n)
-          case n => ("", n)
-        }.collect {
-          case ("", n) => stats0.col(s"`$n`")
-          case (phys, n) if !droppedSet(phys) =>
-            val pfx = n.substring(0, n.length - phys.length)
-            stats0.col(s"`$n`").as(pfx + nameMap.getOrElse(phys, phys))
-        }: _*)
-      val statCols = stats.columns.collect {
-        case n if n.startsWith("min_") => n.stripPrefix("min_")
-      }.toSet
-      // the data schema (for resolving the filters) is recoverable from
-      // the stats schema itself: min_<c> carries c's own type
-      val dataSchema = org.apache.spark.sql.types.StructType(
-        stats.schema.fields.collect {
-          case f if f.name.startsWith("min_") =>
-            org.apache.spark.sql.types.StructField(
-              f.name.stripPrefix("min_"), f.dataType)
-        })
+      // stat columns under v's LOGICAL names, each with its physical key
+      val cols = schemaAt(v).orElse(tableSchema).toSeq
+        .flatMap(_.fields.toSeq)
+        .filter(f => FileStats.supported(f) && !droppedSet(f.name))
+        .map(f => (nameMap.getOrElse(f.name, f.name), f.name, f.dataType))
+      val dataSchema = StructType(cols.map { case (l, _, dt) => StructField(l, dt) })
       // one analysis pass per filter feeds BOTH the stats rewrite and
       // the bloom target extraction
       val analyzed = filters.map(f =>
         FileStats.analyzedCondition(spark, dataSchema, f))
-      val possible = analyzed
-        .map(a => org.apache.spark.sql.graftbridge.ColumnBridge.column(
-          FileStats.pruneExpr(a, statCols)))
-        .reduce(_ && _)
-      import org.apache.spark.sql.functions.{broadcast, col}
-      // restrict stats to this version's file list via a broadcast join
-      // — an In-literal of the whole list would blow up plan size once
-      // the table holds ~10^6 files
-      val wanted =
-        if (all.size <= 256) stats.filter(col("file").isInCollection(all))
-        else {
-          import spark.implicits._
-          stats.join(broadcast(all.toDF("file")), Seq("file"), "left_semi")
-        }
-      val rows = wanted
-        .select(col("file"), possible.as("poss"))
-        .collect()
-      val withStats = rows.map(_.getString(0)).toSet
-      val pass = rows.filter(r => r.isNullAt(1) || r.getBoolean(1))
-        .map(_.getString(0)).toSet
-      val ranged = all.filter(f => !withStats.contains(f) || pass.contains(f))
+      val stats = statsImpl(v)
+      lazy val possible = FileStats.possiblyMatches(cols, analyzed)
+      val ranged = all.filter(f => stats.get(f).forall(possible))
       // bloom phase: point lookups on indexed columns prune further —
       // min/max can't separate uniformly-spread ids, blooms can. The
       // bloom store is keyed by PHYSICAL column; targets are extracted
@@ -904,25 +938,38 @@ final class IncrementalTable(
           ranged.filterNot(miss)
         }
       }
-    } catch { case scala.util.control.NonFatal(_) => all }
+    } catch { case scala.util.control.NonFatal(e) => statsFallback("prunedFilesAt", all)(e) }
+  }
+
+  /** [[statsImpl]] for a commit that carries stats forward: trouble
+    * reading them costs the files their stats, never the commit.
+    */
+  private def carriedStats(v: Long, method: String): Map[String, FileStats.Entry] =
+    try statsImpl(v)
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        statsFallback(method, Map.empty[String, FileStats.Entry])(e)
+    }
+
+  /** One WARN for a failure on the stats path, then the conservative
+    * `answer` (every file kept, no stats, a real scan).
+    */
+  private def statsFallback[T](method: String, answer: T)(e: Throwable): T = {
+    log.warn(s"graft stats fallback for $path in $method, answering " +
+      s"conservatively: ${e.getClass.getName}: ${e.getMessage}")
+    answer
   }
 
   /** Metadata-only aggregate answers over exactly the files in
-    * `names`, computed from the stats sidecar without touching a data
-    * byte — the engine behind the connector's DSv2 aggregate pushdown
-    * (`SELECT count(*) / min(k) / max(k) FROM t` answered from one
-    * pass over the one-row-per-file stats table; Delta and Iceberg
-    * answer the same queries from their commit-log stats).
-    *
-    * Eligibility IS the correctness proof, so the method returns
-    * `None` — caller falls back to a real scan — unless EVERY named
-    * file has exactly one stats row whose referenced columns are
-    * complete: `num_rows` present everywhere (row/non-null counts),
-    * and for each bound column either real (min, max) values or a
-    * provably all-null file (`nulls == num_rows`; a missing bound with
-    * any other null count means the footer was unreadable and the true
-    * extreme is unknowable). Footer chunk statistics are EXACT for the
-    * types the harvest admits, so an eligible answer equals the
+    * `names`, from the latest version's manifest stats on the driver —
+    * the engine behind the connector's DSv2 aggregate pushdown
+    * (`SELECT count(*) / min(k) / max(k) FROM t`, as Delta and Iceberg
+    * answer from commit-log stats). Eligibility IS the correctness
+    * proof: `None` (caller falls back to a real scan) unless EVERY
+    * named file has an entry with `numRecords`, the null counts asked
+    * for, and per bound column a bound or a provably all-null file
+    * (`nullCount == numRecords`). Footer chunk statistics are EXACT for
+    * the types the harvest admits, so an eligible answer equals the
     * scan's.
     *
     * @param names         manifest file entries to aggregate over
@@ -930,125 +977,79 @@ final class IncrementalTable(
     * @param bounds        (column, isMax) extremes wanted
     * @return (total rows, col -> non-null count,
     *         (col, isMax) -> bound value (null = no non-null rows)),
-    *         values typed as the stats store's external rows
+    *         values as the external (`Row`) objects of the column type
     */
   private[graft] def statsAggregateForNames(
       names: Seq[String],
       nonNullCounts: Seq[String],
       bounds: Seq[(String, Boolean)])
       : Option[(Long, Map[String, Long], Map[(String, Boolean), Any])] = {
-    import org.apache.spark.sql.functions.{broadcast, col, count,
-      countDistinct, lit, max, min, sum, when}
     val nnCols = nonNullCounts.distinct
-    val boundCols = bounds.map(_._1).distinct
     if (names.isEmpty)
       return Some((0L, nnCols.map(_ -> 0L).toMap,
         bounds.distinct.map(b => b -> (null: Any)).toMap))
-    recoverSidecar(statsDir)
-    if (!fs.exists(statsDir)) return None
     try {
-      val stats0 = readStatsStore()
-      val have = stats0.columns.toSet
-      val needed = nnCols.map(c => s"nulls_$c") ++
-        boundCols.flatMap(c => Seq(s"min_$c", s"max_$c", s"nulls_$c"))
-      if (!needed.forall(have)) return None
-      // restrict to this scan's file list (broadcast semi-join, not an
-      // In-literal — the list can be ~10^6 entries at scale)
-      val wanted =
-        if (names.size <= 256) stats0.filter(col("file").isInCollection(names))
-        else {
-          import spark.implicits._
-          stats0.join(broadcast(names.toDF("file")), Seq("file"), "left_semi")
-        }
-      val aggs =
-        Seq(count(col("file")).as("__n"),
-          countDistinct(col("file")).as("__nd"),
-          count(col("num_rows")).as("__nrn"),
-          sum(col("num_rows")).as("__rows")) ++
-        nnCols.flatMap(c => Seq(
-          count(col(s"nulls_$c")).as(s"__cn_$c"),
-          sum(col(s"nulls_$c")).as(s"__nulls_$c"))) ++
-        boundCols.flatMap(c => Seq(
-          // a missing bound is ignorable ONLY for a provably all-null
-          // file; isNull-first keeps a poisoned row (all three null)
-          // from three-valued-logic'ing its way past the check
-          sum(when(col(s"min_$c").isNull &&
-              (col(s"nulls_$c").isNull ||
-                col(s"nulls_$c") =!= col("num_rows")), lit(1L))
-            .otherwise(lit(0L))).as(s"__bad_$c"),
-          min(col(s"min_$c")).as(s"__min_$c"),
-          max(col(s"max_$c")).as(s"__max_$c")))
-      val r = wanted.agg(aggs.head, aggs.tail: _*).collect().head
-      def l(n: String): Long = {
-        val i = r.fieldIndex(n)
-        if (r.isNullAt(i)) 0L else r.getLong(i)
-      }
-      val n = names.size.toLong
-      // one row per named file, no more (a doubled harvest would
-      // double-count), no fewer (a stats-less file is unanswerable)
-      if (l("__n") != n || l("__nd") != n || l("__nrn") != n) return None
-      if (nnCols.exists(c => l(s"__cn_$c") != n)) return None
-      if (boundCols.exists(c => l(s"__bad_$c") != 0L)) return None
-      val rows = l("__rows")
-      val nn = nnCols.map(c => c -> (rows - l(s"__nulls_$c"))).toMap
-      val bs = bounds.distinct.map { case (c, isMax) =>
-        val i = r.fieldIndex(if (isMax) s"__max_$c" else s"__min_$c")
-        (c, isMax) -> (if (r.isNullAt(i)) null else r.get(i))
+      val v = latestVersion.getOrElse(return None)
+      val types = tableSchema.toSeq.flatMap(_.fields.toSeq)
+        .filter(FileStats.supported).map(f => f.name -> f.dataType).toMap
+      if (!(nnCols ++ bounds.map(_._1)).forall(types.contains)) return None
+      val stats = statsImpl(v)
+      val entries = names.distinct.map(n => stats.getOrElse(n, return None))
+      if (entries.size != names.size) return None // a doubled name
+      val rows = entries.map(e => FileStats.numRecords(e).getOrElse(return None))
+      val nn = nnCols.map { c =>
+        c -> (rows.sum - entries.map(FileStats.nullCount(_, c).getOrElse(return None)).sum)
       }.toMap
-      Some((rows, nn, bs))
-    } catch { case scala.util.control.NonFatal(_) => None }
+      val bs = bounds.distinct.map { case (c, isMax) =>
+        val dt = types(c)
+        val known = entries.zip(rows).flatMap { case (e, n) =>
+          FileStats.bound(e, c, isMax, dt) match {
+            case some @ Some(_) => some
+            // a missing bound is ignorable ONLY for a provably all-null file
+            case None => if (FileStats.nullCount(e, c).contains(n)) None else return None
+          }
+        }
+        val ord = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(dt)
+        val extreme =
+          if (known.isEmpty) null
+          else if (isMax) known.max(ord) else known.min(ord)
+        (c, isMax) -> org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(dt)(extreme)
+      }.toMap
+      Some((rows.sum, nn, bs))
+    } catch {
+      case scala.util.control.NonFatal(e) => statsFallback("statsAggregateForNames", None)(e)
+    }
   }
 
-  /** Per-file `num_rows` from the stats sidecar for exactly `names` —
-    * the metadata feed for [[compactBuckets]]'s convergence check. A
-    * file with no stats row, a doubled row, or a null count is simply
-    * ABSENT from the map (caller treats absence conservatively: the
-    * bucket rewrites once, which restores its stats). Fail-open: any
-    * store trouble returns an empty map, never a wrong count.
+  /** Per-file `numRecords` from the latest version's manifest stats
+    * for exactly `names` — the metadata feed for [[compactBuckets]]'s
+    * convergence check. A file with no stats entry or no count is
+    * simply ABSENT from the map (caller treats absence conservatively:
+    * the footer fallback, or the bucket rewrites once). Fail-open: any
+    * stats trouble returns an empty map, never a wrong count.
     */
   private def perFileRowCounts(names: Seq[String]): Map[String, Long] = {
     if (names.isEmpty) return Map.empty
-    recoverSidecar(statsDir)
-    if (!fs.exists(statsDir)) return Map.empty
     try {
-      import org.apache.spark.sql.functions.{broadcast, col}
-      val stats0 = readStatsStore()
-      if (!stats0.columns.contains("num_rows")) return Map.empty
-      val wanted =
-        if (names.size <= 256) stats0.filter(col("file").isInCollection(names))
-        else {
-          import spark.implicits._
-          stats0.join(broadcast(names.toDF("file")), Seq("file"), "left_semi")
-        }
-      wanted.select("file", "num_rows").collect()
-        .groupBy(_.getString(0))
-        .collect { case (f, rs) if rs.length == 1 && !rs.head.isNullAt(1) =>
-          f -> rs.head.getLong(1)
-        }.toMap
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+      val stats = latestVersion.map(statsImpl).getOrElse(Map.empty)
+      names.flatMap(n => stats.get(n).flatMap(FileStats.numRecords).map(n -> _)).toMap
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        statsFallback("perFileRowCounts", Map.empty[String, Long])(e)
+    }
   }
 
-  /** Parquet-footer row count for a live data file — the fallback
-    * row-count basis when the stats sidecar has no row for it
-    * (`collectStats = false` tables, files staged by a pre-stats
-    * library era). Metadata-scale: one footer read, no data pages.
-    * Without this fallback an all-s1 split bucket on a stats-less
-    * table can never prove minimal and [[compactBuckets]] rewrites it
-    * on EVERY call — reinstating the O(bucket data) per-append write
-    * amplification the convergence check exists to remove. Fail-open:
-    * an unreadable footer returns None and the caller rewrites the
-    * bucket (the conservative direction — a rewrite is wasteful,
-    * never wrong). Footer `num_rows` is PHYSICAL like the sidecar's;
-    * the caller's deletion-vector carve-out covers both. Counts are
-    * memoized per file name for this instance's lifetime — staged
-    * names are single-use nonces over immutable files, and a
-    * long-lived handle (a streaming sink with autoCompact) would
-    * otherwise re-read the same footers on every append's convergence
-    * probe. Successful reads only: a transient failure may heal.
-    * Bounded: past 8192 entries the memo resets wholesale — vacuumed
-    * and compacted-away names would otherwise accumulate for the
-    * handle's lifetime (a weeks-long stream = a slow driver leak), and
-    * the working set (live fragmented files) re-memoizes in one probe.
+  /** Parquet-footer row count (PHYSICAL, like the stats') of a live
+    * data file the manifest has no stats for (`collectStats = false`
+    * tables, files from before stats moved into the manifest) — else an
+    * all-s1 split bucket on such a table could never prove minimal and
+    * [[compactBuckets]] would rewrite it on EVERY call. One footer read;
+    * fail-open (None: the caller rewrites, wasteful but never wrong).
+    * Successful reads are memoized per (single-use, immutable) file
+    * name so a long-lived handle does not re-read footers on every
+    * append's convergence probe; past 8192 entries the memo resets
+    * wholesale, so dead names cannot leak for the handle's lifetime.
     */
   private val footerRowCountMemo =
     scala.collection.concurrent.TrieMap.empty[String, Long]
@@ -1056,38 +1057,32 @@ final class IncrementalTable(
     footerRowCountMemo.get(name).orElse {
       if (footerRowCountMemo.size > 8192) footerRowCountMemo.clear()
       try {
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            dataPath(name), spark.sparkContext.hadoopConfiguration))
-        val n = try {
-          import scala.jdk.CollectionConverters._
-          rd.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-        } finally rd.close()
+        val n = FileStats.numRecords(FileStats.harvest(spark.sparkContext
+          .hadoopConfiguration, dataPath(name).toString, new StructType())).get
         footerRowCountMemo.put(name, n)
         Some(n)
       } catch { case scala.util.control.NonFatal(_) => None }
     }
 
-  private def recordStats(df: DataFrame, named: Seq[String]): Unit =
+  /** Bloom point-lookup index (opt-in): one pass over the NEW batch,
+    * into its own subdirectory (concurrent writers must never share a
+    * Spark job-commit _temporary dir). The config holds PHYSICAL names;
+    * a frame staged under LOGICAL names (materializeColumnMapping's
+    * realign) indexes the logical name — what the post-materialize
+    * config will point at.
+    */
+  private def recordBlooms(df: DataFrame, named: Seq[String]): Unit =
     if (collectStats && named.nonEmpty) {
-      val withPaths = named.map(n => n -> new Path(dataDir, n).toString)
-      // each write lands in its own subdirectory: concurrent writers
-      // must never share a Spark job-commit _temporary dir
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
-      FileStats.collect(spark, df.schema, withPaths)
-        .coalesce(1).write.parquet(new Path(statsDir, nonce).toString)
-      // bloom point-lookup index (opt-in): one pass over the NEW batch.
-      // The config holds PHYSICAL names; a frame staged under LOGICAL
-      // names (materializeColumnMapping's realign) indexes the logical
-      // name instead — which is exactly what the post-materialize
-      // config will point at.
       val map = colMap
       val bloomed = bloomColumns
         .map(p => if (df.schema.fieldNames.contains(p)) p else map.getOrElse(p, p))
         .distinct.filter(df.schema.fieldNames.contains)
-      if (bloomed.nonEmpty)
-        BloomIndex.build(spark, df.schema, withPaths.map(_._2), bloomed)
+      if (bloomed.nonEmpty) {
+        val nonce = java.util.UUID.randomUUID().toString.take(8)
+        BloomIndex.build(spark, df.schema,
+          named.map(n => new Path(dataDir, n).toString), bloomed)
           .coalesce(1).write.parquet(new Path(bloomsDir, nonce).toString)
+      }
     }
 
   // ---- column mapping (Delta's rename/drop-without-rewrite design):
@@ -1470,53 +1465,52 @@ final class IncrementalTable(
       meta = Map("bloom" -> phys.mkString(";")))
   }
 
-  /** Drop every stored bloom row for `cols` — the same read-filter-swap
-    * the vacuum sweep uses. A concurrent writer's rows for OTHER
-    * columns can be lost in the swap window; that degrades its files
-    * to no-filter (conservatively kept by every probe), never to a
-    * wrong prune.
+  /** Drop every stored bloom row for `cols`. */
+  private def purgeBloomRows(cols: Set[String]): Unit =
+    rewriteBlooms(_.filter(!org.apache.spark.sql.functions.col("col")
+      .isin(cols.toSeq: _*)))
+
+  /** Replace the bloom store by `keep` of its rows (read-filter-swap). A
+    * concurrent writer's rows can be lost in the swap window; that
+    * degrades its files to no-filter (conservatively kept by every
+    * probe), never to a wrong prune.
     */
-  private def purgeBloomRows(cols: Set[String]): Unit = {
-    recoverSidecar(bloomsDir)
+  private def rewriteBlooms(keep: DataFrame => DataFrame): Unit = {
+    recoverBlooms()
     if (!fs.exists(bloomsDir)) return
-    val tmp = sidecarTmp(bloomsDir)
     // a crashed prior tmp WRITE's leftovers must not ride into this
     // swap — duplicate (file, col) rows from different eras could
     // disagree. (A stranded COMPLETE tmp was already promoted by the
     // recovery above, so this delete only ever removes partial writes.)
-    fs.delete(tmp, true)
+    fs.delete(bloomsTmp, true)
     val nonce = java.util.UUID.randomUUID().toString.take(8)
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(bloomsDir.toString)
-      .filter(!org.apache.spark.sql.functions.col("col")
-        .isin(cols.toSeq: _*))
-      .coalesce(1).write.parquet(new Path(tmp, nonce).toString)
-    promoteSidecar(tmp, bloomsDir)
+    keep(spark.read.option("recursiveFileLookup", "true").parquet(bloomsDir.toString))
+      .coalesce(1).write.parquet(new Path(bloomsTmp, nonce).toString)
+    promoteBlooms()
   }
 
-  private def sidecarTmp(target: Path) = new Path(path, target.getName + "_tmp")
-  private def sidecarAside(target: Path) = new Path(path, target.getName + "_old")
+  private val bloomsTmp = new Path(path, "_blooms_tmp")
+  private val bloomsAside = new Path(path, "_blooms_old")
 
-  /** Crash-safe sidecar (stats/bloom) replacement. The previous
+  /** Crash-safe replacement of the bloom store. The previous
     * protocol was delete-then-rename: a crash between the two stranded
     * the surviving rows in the tmp dir, and the NEXT swap's defensive
     * tmp delete destroyed them — the whole index silently vanished
     * (degrade was conservative, files stop pruning, but total). Now the
     * live dir is renamed ASIDE before the replacement is promoted, so
     * at every instant either the live dir or a complete replacement
-    * exists on disk, and [[recoverSidecar]] finishes a stranded swap on
+    * exists on disk, and [[recoverBlooms]] finishes a stranded swap on
     * the next access.
     */
-  private def promoteSidecar(tmp: Path, target: Path): Unit = {
-    val aside = sidecarAside(target)
-    fs.delete(aside, true)
-    if (fs.exists(target) && !fs.rename(target, aside))
-      throw new IllegalStateException(s"failed to set aside $target")
-    if (!fs.rename(tmp, target)) {
-      if (fs.exists(aside)) fs.rename(aside, target) // roll back
-      throw new IllegalStateException(s"failed to swap $target for $path")
+  private def promoteBlooms(): Unit = {
+    fs.delete(bloomsAside, true)
+    if (fs.exists(bloomsDir) && !fs.rename(bloomsDir, bloomsAside))
+      throw new IllegalStateException(s"failed to set aside $bloomsDir")
+    if (!fs.rename(bloomsTmp, bloomsDir)) {
+      if (fs.exists(bloomsAside)) fs.rename(bloomsAside, bloomsDir) // roll back
+      throw new IllegalStateException(s"failed to swap $bloomsDir for $path")
     }
-    fs.delete(aside, true)
+    fs.delete(bloomsAside, true)
   }
 
   /** Complete (or roll back) a swap a crash stranded. Promoting tmp is
@@ -1527,13 +1521,11 @@ final class IncrementalTable(
     * shares [[purgeBloomRows]]' concurrency stance (a racing writer
     * degrades to conservative no-filter, never a wrong prune).
     */
-  private def recoverSidecar(target: Path): Unit =
-    if (!fs.exists(target)) {
-      val tmp = sidecarTmp(target)
-      val aside = sidecarAside(target)
-      if (fs.exists(tmp)) {
-        if (fs.rename(tmp, target)) fs.delete(aside, true)
-      } else if (fs.exists(aside)) fs.rename(aside, target)
+  private def recoverBlooms(): Unit =
+    if (!fs.exists(bloomsDir)) {
+      if (fs.exists(bloomsTmp)) {
+        if (fs.rename(bloomsTmp, bloomsDir)) fs.delete(bloomsAside, true)
+      } else if (fs.exists(bloomsAside)) fs.rename(bloomsAside, bloomsDir)
     }
 
   /** Whether lossless type widening (int→long, float→double) is
@@ -1620,7 +1612,7 @@ final class IncrementalTable(
     // layout-defining rewrite, not just the bucket count: under
     // maxRecordsPerFile a converged layout legitimately holds several
     // files per bucket, and a bucket-count floor would fire the whole
-    // compaction check (a stats-store read) on EVERY append forever.
+    // compaction check on EVERY append forever.
     // The settling commit STAMPS its file count into carried meta
     // ("settled" in commitFiles), so the floor survives indefinitely;
     // the bounded newest→oldest manifest walk remains only as the
@@ -1645,8 +1637,7 @@ final class IncrementalTable(
     ()
   } catch {
     case scala.util.control.NonFatal(e) =>
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"graft auto-compact failed open for $path: $e")
+      log.warn(s"graft auto-compact failed open for $path: $e")
   }
 
   /** Drop the `type-widening` reader-feature demand (Delta's
@@ -1715,25 +1706,6 @@ final class IncrementalTable(
       maxRetries = 0, dropMeta = Set("widened"), requireBase = Some(v))
   }
 
-  private def readStatsStore(): DataFrame = tableSchema match {
-    // under a tracked schema, read the store with the CURRENT stats
-    // schema explicitly: after a type widening the store holds int- and
-    // long-typed min_/max_ columns in different files, which parquet
-    // schema MERGING refuses — while an explicit wide schema simply
-    // upcasts the narrow files (stale columns drop, missing ones read
-    // null = no skip, both conservative)
-    case Some(s) =>
-      spark.read
-        .schema(FileStats.statsSchema(s))
-        .option("recursiveFileLookup", "true")
-        .parquet(statsDir.toString)
-    case None =>
-      spark.read
-        .option("mergeSchema", "true")
-        .option("recursiveFileLookup", "true")
-        .parquet(statsDir.toString)
-  }
-
   def history(): DataFrame = {
     // one forward fold over the log — each manifest read once, file
     // counts maintained incrementally. The OLDEST retained version must
@@ -1757,10 +1729,6 @@ final class IncrementalTable(
 
   // ---- writes ----
 
-  /** Write `df`'s files into `data/` under `subdir` (e.g. a bucket
-    * directory; "" for flat) and return their manifest-relative names.
-    * Files are staged then renamed — readers never see partial files.
-    */
   /** Upcast `df`'s numeric columns to the TRACKED physical width —
     * Delta's write-side cast. Staged files therefore never land
     * NARROWER than the tracked schema: without this, a narrow batch
@@ -1789,6 +1757,13 @@ final class IncrementalTable(
       }: _*)
   }
 
+  /** Write `df`'s files into `data/` under `subdir` (e.g. a bucket
+    * directory; "" for flat) and return their manifest-relative names.
+    * Files are staged then renamed — readers never see partial files.
+    * Nothing is visible until a commit lists the names; that commit
+    * harvests their footer stats into its manifest. An enabled bloom
+    * index is built here, in one pass over the batch.
+    */
   def stage(df0: DataFrame, subdir: String = "", remap: Boolean = true): Seq[String] = {
     val df = if (remap) conformWidths(physicalize(df0)) else df0
     // (remap=false is reserved for materializeColumnMapping's realign;
@@ -1807,7 +1782,7 @@ final class IncrementalTable(
       if (subdir.isEmpty) name else s"$subdir/$name"
     }
     fs.delete(new Path(path, s"_stage/$nonce"), true)
-    recordStats(df, named)
+    recordBlooms(df, named)
     named
   }
 
@@ -1836,7 +1811,7 @@ final class IncrementalTable(
         }
     }
     fs.delete(new Path(path, s"_stage/$nonce"), true)
-    recordStats(df.drop(partitionCol), named)
+    recordBlooms(df.drop(partitionCol), named)
     named
   }
 
@@ -2559,13 +2534,13 @@ final class IncrementalTable(
     // forever (and with autoCompact on, O(bucket data) write
     // amplification on every append). An all-s1 bucket already at its
     // minimal achievable count (ceil(rows / maxRecordsPerFile), from
-    // the per-file stats sidecar) is COMPACT: a rewrite cannot reduce
-    // it. Any bucket with an unsorted file or more files than minimal
-    // still rewrites. Row counts come from the stats sidecar with a
-    // parquet-footer fallback ([[footerRowCount]]) — on a
+    // the manifest's per-file stats) is COMPACT: a rewrite cannot
+    // reduce it. Any bucket with an unsorted file or more files than
+    // minimal still rewrites. Row counts come from the manifest stats
+    // with a parquet-footer fallback ([[footerRowCount]]) — on a
     // collectStats=false table the rewrite's staged files never gain
-    // sidecar rows, so without the fallback every call would rewrite
-    // all-s1 split buckets forever.
+    // stats, so without the fallback every call would rewrite all-s1
+    // split buckets forever.
     val maxRec = spark.conf.get("spark.sql.files.maxRecordsPerFile", "0").toLong
     // deletion vectors make the stats' PHYSICAL num_rows a lie about
     // live data (a mostly-masked bucket would be deemed "minimal" and
@@ -2970,7 +2945,7 @@ final class IncrementalTable(
       v: Long, pred: Column, alias: Option[String]): (Seq[String], DataFrame) = {
     import org.apache.spark.sql.functions.col
     checkReaderFeatures(v)
-    val cand = prunedFiles(files(v), Seq(pred))
+    val cand = prunedFilesAt(v, files(v), Seq(pred))
     if (cand.isEmpty) return (cand, null)
     val reader = tableSchema.map(spark.read.schema).getOrElse(spark.read)
     val read0 = reader.parquet(cand.map(f => dataPath(f).toString): _*)
@@ -3273,10 +3248,12 @@ final class IncrementalTable(
     // features we don't implement would publish its data files under a
     // clone manifest with no stamp, making every reader misread
     src.checkReaderFeatures(v)
-    val entries = src.files(v).map { e =>
-      if (e.startsWith("ext:")) e // clone of a clone: keep the original refs
-      else "ext:" + src.fs.makeQualified(new Path(src.dataDir, e)).toString
+    val srcStats = src.carriedStats(v, "cloneFrom")
+    val refs = src.files(v).map { e =>
+      (if (e.startsWith("ext:")) e // clone of a clone: keep the original refs
+      else "ext:" + src.fs.makeQualified(new Path(src.dataDir, e)).toString) -> e
     }
+    val entries = refs.map(_._1)
     val srcMeta = src.metaAt(v)
     val dvMeta = srcMeta.get("dv") match {
       case None => Map.empty[String, String]
@@ -3309,8 +3286,10 @@ final class IncrementalTable(
         .map(w => wmKey -> w.toString).toMap
     val idMeta = wmCarry("id_watermark", "identity") ++
       wmCarry("row_watermark", "rowtracking")
+    // the referenced files' stats carry with them: no footer re-read
     writeManifest(0L, s"clone[v$v]", entries,
-      dvMeta ++ carryMeta ++ idMeta ++ schemaMetaFor(None, src.schemaAt(v)))
+      dvMeta ++ carryMeta ++ idMeta ++ schemaMetaFor(None, src.schemaAt(v)),
+      knownStats = refs.flatMap { case (ref, e) => srcStats.get(e).map(ref -> _) }.toMap)
     0L
   }
 
@@ -3368,14 +3347,8 @@ final class IncrementalTable(
           s"CONVERT TO GRAFT: failed to move $p under $dataDir")
       name
     }
-    // footer-stats harvest — the same metadata-only read a staged
-    // commit gets, so converted files prune immediately
-    if (collectStats) {
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
-      FileStats.collect(spark, schema,
-        named.map(n => n -> new Path(dataDir, n).toString))
-        .coalesce(1).write.parquet(new Path(statsDir, nonce).toString)
-    }
+    // the manifest write harvests every file's footer stats, as for a
+    // staged commit, so converted files prune immediately
     writeManifest(0L, "convert", named, schemaMetaFor(None, Some(schema)))
     0L
   }
@@ -3508,7 +3481,8 @@ final class IncrementalTable(
             "identity", "widen", "rowtracking").contains(k) } ++
         watermarkCarry(headMeta) // counters NEVER rewind (see scaladoc)
       try {
-        writeManifest(base + 1, s"restore[$v]", target, carried)
+        writeManifest(base + 1, s"restore[$v]", target, carried,
+          knownStats = carriedStats(v, "restore")) // re-added files keep v's stats
         return base + 1
       } catch {
         case e: CommitConflictException =>
@@ -3708,7 +3682,7 @@ final class IncrementalTable(
   def compactWhere(pred: Column, targetFiles: Int = 1): Long = {
     val v = latestVersion.getOrElse(
       throw new IllegalStateException(s"empty table $path"))
-    val cand = prunedFiles(files(v), Seq(pred))
+    val cand = prunedFilesAt(v, files(v), Seq(pred))
       .filterNot(_.startsWith("ext:"))
     def dirOf(rel: String): String = {
       val i = rel.lastIndexOf('/')
@@ -3760,10 +3734,6 @@ final class IncrementalTable(
     }
   }
 
-  /** Delete data files referenced by NO kept manifest, and manifests
-    * older than the last `keepLast` (readers of vacuumed versions fail
-    * — Delta VACUUM contract).
-    */
   /** The data files `vacuum(keepLast)` WOULD delete — `VACUUM ... DRY
     * RUN`. Same reference-count walk, no deletion, no checkpoint pin.
     */
@@ -3784,6 +3754,11 @@ final class IncrementalTable(
         .sorted
     }.getOrElse(Seq.empty)
 
+  /** Delete data files referenced by NO kept manifest, and manifests
+    * older than the last `keepLast` (readers of vacuumed versions fail
+    * — Delta VACUUM contract). The oldest kept version is pinned by a
+    * checkpoint carrying its files' stats, so pruning survives.
+    */
   def vacuum(keepLast: Int = 1): Unit = latestVersion.foreach { latest =>
     val cutoff = latest - math.max(1, keepLast) + 1
     val (dropIds, keepIds) = manifestIds.partition(_ < cutoff)
@@ -3792,7 +3767,7 @@ final class IncrementalTable(
     // as a checkpoint sidecar BEFORE dropping what it walks back to
     if (dropIds.nonEmpty && versionExists(cutoff) &&
         readManifestParts(cutoff)._3.isEmpty && !hasCheckpoint(cutoff)) {
-      writeCheckpoint(cutoff, files(cutoff))
+      writeCheckpoint(cutoff, files(cutoff), carriedStats(cutoff, "vacuum"))
       // this pin is LOAD-BEARING (unlike the best-effort commit-time
       // checkpoints): if it didn't land, deleting the older manifests
       // would make every retained version unreconstructible
@@ -3824,6 +3799,7 @@ final class IncrementalTable(
       // metaAt(v) on this instance has to fail loudly like an uncached
       // read would, not silently serve the vacuumed version
       filesCache.remove(v)
+      statsCache.remove(v)
       metaCache.remove(v)
     }
     // schema blobs referenced by no kept manifest are garbage too
@@ -3868,33 +3844,15 @@ final class IncrementalTable(
           .foreach(st => fs.delete(st.getPath, true))
       }
     }
-    // drop stats rows for vacuumed files (stale rows are harmless for
-    // correctness — pruning joins against the manifest — but unbounded)
-    recoverSidecar(statsDir)
-    if (fs.exists(statsDir)) {
-      val tmp = sidecarTmp(statsDir)
-      fs.delete(tmp, true) // partial leftovers of a crashed tmp write
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
-      import spark.implicits._
-      readStatsStore()
-        .join(org.apache.spark.sql.functions.broadcast(keep.toSeq.toDF("file")),
-          Seq("file"), "left_semi")
-        .coalesce(1).write.mode("overwrite").parquet(new Path(tmp, nonce).toString)
-      promoteSidecar(tmp, statsDir)
-    }
-    // bloom rows follow the same rule as stats rows
-    recoverSidecar(bloomsDir)
-    if (fs.exists(bloomsDir)) {
-      val tmp = sidecarTmp(bloomsDir)
-      fs.delete(tmp, true) // ditto
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
-      import spark.implicits._
-      spark.read.option("recursiveFileLookup", "true").parquet(bloomsDir.toString)
-        .join(org.apache.spark.sql.functions.broadcast(keep.toSeq.toDF("file")),
-          Seq("file"), "left_semi")
-        .coalesce(1).write.mode("overwrite").parquet(new Path(tmp, nonce).toString)
-      promoteSidecar(tmp, bloomsDir)
-    }
+    // the per-file stats store of tables written before stats moved into
+    // the manifest (with its swap dirs) is dead weight: nothing reads it
+    Option(fs.globStatus(new Path(path, "_stats*"))).toSeq.flatten
+      .foreach(st => fs.delete(st.getPath, true))
+    // drop bloom rows of vacuumed files (stale rows are harmless for
+    // correctness — pruning probes only manifest files — but unbounded)
+    import spark.implicits._
+    rewriteBlooms(_.join(org.apache.spark.sql.functions.broadcast(
+      keep.toSeq.toDF("file")), Seq("file"), "left_semi"))
   }
 }
 
@@ -4072,10 +4030,14 @@ object IncrementalTable {
           .cast(df.schema(idCol).dataType)))
   }
 
-  /** One row per referenced data file — the whole checkpoint. */
+  /** One row per referenced data file (and its stats entry, if any). */
   private[lake] val CheckpointSchema: org.apache.parquet.schema.MessageType =
     org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      "message graft_checkpoint { required binary file (UTF8); }")
+      "message graft_checkpoint { required binary file (UTF8); " +
+        "optional binary stats (UTF8); }")
+
+  /** Table paths this JVM has already checked for a legacy `_stats/`. */
+  private val legacyStatsChecked = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Column names ride the manifest meta's `k=v;k=v` / `a;b` encodings,
     * so the encoding's structural characters are illegal in them — the

@@ -112,7 +112,7 @@ final class IncrementalView private (
     df.groupBy(groupCols.map(col): _*).agg(exprs.head, exprs.tail: _*)
   }
 
-  /** Range-cluster by group key before staging so the stats store can
+  /** Range-cluster by group key before staging so the file stats can
     * prune view files on the NEXT incremental refresh.
     */
   private def clustered(df: DataFrame, targetFiles: Int): DataFrame =

@@ -780,7 +780,7 @@ object RelationalQueries {
 
   /** Metadata-only aggregates: lineitem lands in a 4-file graft table
     * and the global `count(*) / min / max / count(col)` over the
-    * unfiltered scan is answered from the per-file stats sidecar —
+    * unfiltered scan is answered from the manifest's per-file stats —
     * planned as a driver-local one-row scan, zero data files read
     * ([[graft.sources]] DSv2 aggregate pushdown;
     * `StatsAggregatePushdownSpec` pins the plan shape, this query

@@ -337,7 +337,7 @@ class SemDedupIndex(
 
 object SemDedupIndex {
   /** The shared driver-predicate rule: a value set at most this large
-    * becomes an `isin` the stats store can prune files with; anything
+    * becomes an `isin` the file stats can prune files with; anything
     * larger falls back to a full scan of the (narrow) vecs table.
     */
   val MaxKeysInPredicate = 256

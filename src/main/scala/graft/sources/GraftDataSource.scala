@@ -308,7 +308,7 @@ private[sources] class GraftVersionedParquet extends ParquetDataSourceV2 {
       val picked = Option(map.get("skipWhere")) match {
         case Some(sql) if sql.trim.nonEmpty =>
           val e = sparkSession.sessionState.sqlParser.parseExpression(sql)
-          val kept = inc.prunedFiles(inc.files(v),
+          val kept = inc.prunedFilesAt(v, inc.files(v),
             Seq(org.apache.spark.sql.graftbridge.ColumnBridge.column(e)))
           // when stats prove EVERY file out, keep one arbitrary file:
           // an empty path list would fail parquet schema inference,

@@ -572,7 +572,7 @@ private[sources] final class GraftStreamScan(inner: Scan, info: GraftStreamInfo)
   // fact table a dim-filtered star join then reads O(matching files),
   // not O(table). Every edge fails OPEN (scan stays unpruned; the join
   // still filters rows): the predicate is a shape stats can't use, the
-  // stats store is absent, the key set exceeds [[DfpMaxInValues]], or
+  // files have no stats, the key set exceeds [[DfpMaxInValues]], or
   // the rebuild throws. ----
 
   @volatile private var pruned: Option[Scan] = None
@@ -686,7 +686,7 @@ private[sources] object GraftStreamScan {
       .normPath(fs.makeQualified(p))
   }
 
-  /** Types the per-file min/max stats store can order — the columns
+  /** Types the per-file min/max stats can order — the columns
     * worth advertising as runtime-filterable. */
   private[sources] def statsFilterable(
       dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
@@ -736,11 +736,9 @@ private[sources] final class GraftStreamScanBuilder(
   }
   // ---- metadata-only aggregate pushdown: a global
   // count(*)/count(col)/min(col)/max(col) over an unfiltered graft
-  // scan is answered from the per-file stats sidecar (one aggregation
-  // over one row per file — no data byte read), served as a driver-
-  // local one-row scan. Delta and Iceberg answer the same queries from
-  // commit-log stats; at 100 TB this is the difference between
-  // milliseconds and a full-table scan. Eligibility is proved by
+  // scan is answered from the manifest's per-file stats (no data byte
+  // read, no job), served as a driver-local one-row scan — as Delta and
+  // Iceberg answer from commit-log stats. Eligibility is proved by
   // [[IncrementalTable.statsAggregateForNames]] over EXACTLY the file
   // set this scan resolved; any doubt falls back to the real scan
   // (then to the parquet builder's own footer-level pushdown). ----

@@ -14,8 +14,8 @@ import graft.lake.IncrementalTable
 
 /** Metadata-only aggregate pushdown: a global count(*)/count(col)/
   * min/max over an unfiltered graft scan is answered from the per-file
-  * stats sidecar and planned as a driver-local one-row scan — zero
-  * tasks, zero data files read. Everything doubtful falls back to the
+  * stats in the manifest and planned as a driver-local one-row scan —
+  * zero tasks, zero data files read. Everything doubtful falls back to the
   * real scan with identical results.
   */
 class StatsAggregatePushdownSpec extends AnyFunSuite with SparkSpec {

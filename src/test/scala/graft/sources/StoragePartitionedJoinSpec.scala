@@ -630,7 +630,7 @@ class StoragePartitionedJoinSpec extends AnyFunSuite with SparkSpec {
       val v1 = a.latestVersion.get
       assert(a.files(v1).size > 8,
         s"buckets must split under the cap: ${a.files(v1).size}")
-      // no sidecar rows exist for ANY staged file on this table; the
+      // no manifest stats exist for ANY staged file on this table; the
       // parquet-footer fallback must still prove the all-s1 split
       // buckets minimal (the pre-fix behavior rewrote them on every
       // call — unbounded per-append write amplification on exactly
