@@ -97,10 +97,18 @@ object Clusters {
         p.schema("dst").dataType == p.schema("src").dataType) {
       val sample = p.take(thresh + 1)
       if (sample.length <= thresh &&
-          !sample.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return localComponents(p.sparkSession, sample,
-          p.schema("src").dataType,
-          p.schema("src").nullable || p.schema("dst").nullable)
+          !sample.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
+        // a LocalRelation, so a downstream join can broadcast it
+        // without a single Spark job
+        val dt = p.schema("src").dataType
+        val labels = localComponents(
+          sample.iterator.map(r => (r.get(0), r.get(1))), localOrdering(dt).get)
+        return p.sparkSession.createDataFrame(
+          java.util.Arrays.asList(labels.map { case (id, c) => Row(id, c) }: _*),
+          StructType(Seq(
+            StructField("id", dt, p.schema("src").nullable || p.schema("dst").nullable),
+            StructField("cluster_id", dt, nullable = true))))
+      }
     }
     // symmetric closure + one self-loop per node (so the min-aggregate
     // below sees the node's own label), deduped, pre-partitioned on
@@ -180,7 +188,11 @@ object Clusters {
   }
 
   /** `graft.cc.localEdgeThreshold`: the largest edge count that takes
-    * the driver-local path (default 100000, 0 disables it). A value
+    * the driver-local path (default 100000, 0 disables it). The same
+    * budget gates [[FingerprintDedupIndex.dedupBatch]]'s driver-side
+    * decisions: a batch decides on the driver only when both its band
+    * rows and its candidate pairs (the sum of C(s, 2) over its
+    * (band, bv) buckets) fit it. A value
     * that is not an integer in [0, Int.MaxValue - 1] fails here, naming
     * the conf, rather than as a bare NumberFormatException or a
     * negative `take` size.
@@ -201,13 +213,13 @@ object Clusters {
   private def localOrdering(dt: DataType): Option[Ordering[Any]] =
     graft.functions.ValueOrdering.forType(dt)
 
-  /** Driver-local union-find over a collected edge list; emits one row
-    * per node (either endpoint) labeled with its component's minimum id
-    * — exactly the distributed fixpoint, as a LocalRelation (so a
-    * downstream join can broadcast it without a single Spark job).
+  /** Driver-local union-find over an edge list: every node (either
+    * endpoint), in first-seen order, paired with its component's
+    * minimum id under `ord` — exactly the distributed fixpoint. Shared
+    * with [[FingerprintDedupIndex]]'s driver-side batch decisions.
     */
-  private def localComponents(spark: SparkSession, edges: Array[Row],
-      dt: DataType, idNullable: Boolean): DataFrame = {
+  private[dedup] def localComponents(edges: Iterator[(Any, Any)],
+      ord: Ordering[Any]): Seq[(Any, Any)] = {
     val idx = new java.util.HashMap[Any, Integer]()
     val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
     val parent = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -229,12 +241,11 @@ object Clusters {
       }
       x
     }
-    edges.foreach { r =>
-      val a = find(intern(r.get(0)))
-      val b = find(intern(r.get(1)))
+    edges.foreach { case (u, v) =>
+      val a = find(intern(u))
+      val b = find(intern(v))
       if (a != b) parent(math.max(a, b)) = math.min(a, b)
     }
-    val ord = localOrdering(dt).get
     val minOf = new Array[Any](ids.length)
     var i = 0
     while (i < ids.length) {
@@ -242,15 +253,7 @@ object Clusters {
       if (minOf(r) == null || ord.lt(ids(i), minOf(r))) minOf(r) = ids(i)
       i += 1
     }
-    val rows = new java.util.ArrayList[Row](ids.length)
-    i = 0
-    while (i < ids.length) {
-      rows.add(Row(ids(i), minOf(find(i))))
-      i += 1
-    }
-    spark.createDataFrame(rows, StructType(Seq(
-      StructField("id", dt, idNullable),
-      StructField("cluster_id", dt, nullable = true))))
+    ids.indices.map(k => (ids(k), minOf(find(k))))
   }
 
   /** Connected components via alternating large-star / small-star

@@ -1,7 +1,10 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import graft.lake.IncrementalTable
@@ -50,19 +53,25 @@ trait FingerprintIndexLike {
   * the FULL fingerprint, so candidate verification is an inline XOR
   * popcount on the joined row — no separate verify-side table, and
   * therefore no multi-table commit-ordering protocol. Rows are
-  * write-ordered by (band, bv): files are born clustered on the join
-  * key and a small batch's band-value set stats-prunes the scan to the
-  * files it can possibly collide with.
+  * write-ordered by (band, bv), and a small batch's scan filters on its
+  * band-value set; each file spans whole bands, so every file's `bv`
+  * range covers the 16-bit domain and that filter keeps every file in
+  * practice (pruning on the (band, bv) pair is open work).
   *
-  * [[dedupBatch]] touches O(batch) + the pruned index slices: the
-  * batch's band rows broadcast against the index scan (the big side
-  * streams, never shuffles), exact Hamming re-check inline, decisions:
+  * [[dedupBatch]] touches O(batch) + the index scan: the batch's band
+  * rows broadcast against the scan (the big side streams, never
+  * shuffles), exact Hamming re-check inline, decisions:
   *
   *  - `dup_corpus`: within `maxHamming` of an indexed fingerprint;
   *  - `dup_batch`: among the rest, intra-batch near-dup pairs close
   *    into connected components and every member but the min id drops;
   *  - `kept`: everything else — [[admit]] appends its band rows, so
   *    the NEXT batch deduplicates against corpus ∪ kept.
+  *
+  * A batch within `graft.cc.localEdgeThreshold` ([[Clusters]]) is
+  * decided on the driver around that one scan; a larger one, or one
+  * whose id type has no driver ordering, takes the distributed plan.
+  * Both give the same decisions.
   *
   * Deterministic integer arithmetic end to end, so a plain-SQL oracle
   * replays the whole multi-batch arc bit-for-bit (the
@@ -76,6 +85,7 @@ class FingerprintDedupIndex(
   def decisionIdCol: String = idCol
 
   ImageDedup.requireExactPigeonhole(maxHamming, bandBits)
+  require(maxBucketSize >= 1, s"maxBucketSize=$maxBucketSize must be >= 1")
 
   val fpTable = new IncrementalTable(spark, s"$base/fps")
 
@@ -115,16 +125,127 @@ class FingerprintDedupIndex(
       fpTable.scan(col("bv").isInCollection(bvs))
     else fpTable.snapshot()
 
+  /** The batch band rows `(band, bv, new_id, nhi, nlo)` within
+    * `maxHamming` of an indexed fingerprint other than themselves, as
+    * distinct `new_id`s. `corpus_id =!= new_id`: a REPLAYED streaming
+    * batch whose admit completed before the crash sees ITSELF in the
+    * index — without the guard every fingerprint would match itself as
+    * dup_corpus.
+    */
+  private def corpusDups(bvs: Seq[Any], newBands: DataFrame): DataFrame =
+    prunedScan(bvs)
+      .select(col("band"), col("bv"), col(idCol).as("corpus_id"),
+        col("h_hi").as("chi"), col("h_lo").as("clo"))
+      .join(broadcast(newBands), Seq("band", "bv"))
+      .filter(col("corpus_id") =!= col("new_id"))
+      .filter((bit_count(col("chi").bitwiseXOR(col("nhi"))) +
+        bit_count(col("clo").bitwiseXOR(col("nlo")))) <= maxHamming)
+      .select("new_id").distinct()
+
   /** Near-dup decisions for a batch of fingerprints against the index
-    * ∪ the batch itself: one row per batch id,
-    * `(idCol, status ∈ kept|dup_corpus|dup_batch, kept 0|1)`.
+    * ∪ the batch itself: one row per batch row,
+    * `(idCol, status ∈ kept|dup_corpus|dup_batch, kept 0|1)`; a NULL id
+    * or a fingerprint with a NULL half matches nothing and is `kept`.
     * Call [[admit]] with the SAME hashes and the returned decisions to
     * make the kept fingerprints visible to the next batch.
+    *
+    * The returned frame is materialized either way. A batch whose band
+    * rows and candidate pairs both fit `graft.cc.localEdgeThreshold`
+    * (and whose id type [[graft.functions.ValueOrdering]] covers) is
+    * collected once and decided on the driver: the index scan is its
+    * only Spark action and the decisions come back as a LocalRelation,
+    * so collecting them runs no job. Anything else takes the
+    * distributed plan (banded self-join, [[Clusters.connectedComponents]],
+    * `localCheckpoint`); `graft.cc.localEdgeThreshold=0` forces it.
     */
   def dedupBatch(hashes: DataFrame): DataFrame = {
     require(exists, s"fingerprint index at $base is not bootstrapped")
     val batch = hashes.select(col(idCol), col("h_hi"), col("h_lo"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    localDecisions(batch).getOrElse(distributedDecisions(batch))
+  }
+
+  /** [[dedupBatch]] on the driver, or None when the batch is over the
+    * budget or its id type has no driver ordering. Reproduces the
+    * distributed plan step for step: the same band values, the same
+    * hot-bucket cap, the same corpus join, and pairs verified by the
+    * same popcount before [[Clusters.localComponents]] labels them.
+    */
+  private def localDecisions(batch: DataFrame): Option[DataFrame] = {
+    val spark = batch.sparkSession
+    val budget = Clusters.localEdgeThreshold(spark)
+    val idField = batch.schema.head
+    val nBands = 64 / bandBits
+    val ordering = graft.functions.ValueOrdering.forType(idField.dataType)
+    if (budget == 0 || ordering.isEmpty ||
+        batch.schema.tail.exists(_.dataType != LongType)) return None
+    val rows = batch.take(budget / nBands + 1)
+    if (rows.length.toLong * nBands > budget) return None
+    // band values as ImageDedup.bandExploded derives them (a NULL half
+    // has none), bucketed by (band, bv) over row indices
+    val perHalf = 32 / bandBits
+    val mask = (1L << bandBits) - 1
+    val buckets = mutable.LinkedHashMap.empty[(Int, Long), mutable.ArrayBuffer[Int]]
+    for (i <- rows.indices; k <- 0 until nBands) {
+      val half = if (k < perHalf) 2 else 1
+      if (!rows(i).isNullAt(half)) {
+        val bv = (rows(i).getLong(half) >> (bandBits * (k % perHalf))) & mask
+        buckets.getOrElseUpdate((k, bv), mutable.ArrayBuffer.empty[Int]) += i
+      }
+    }
+    // the hot-bucket cap drops whole buckets (ImageDedup.capBuckets)
+    val blocked = buckets.filter(_._2.size <= maxBucketSize)
+    val pairs = blocked.valuesIterator.map(b => b.size.toLong * (b.size - 1) / 2).sum
+    if (pairs > budget) return None
+    // only rows with an id and both halves can match anything
+    def live(i: Int): Boolean = !rows(i).anyNull
+    val probeRows = for (((band, bv), members) <- blocked.toSeq;
+        i <- members if live(i))
+      yield Row(band, bv, rows(i).get(0), rows(i).getLong(1), rows(i).getLong(2))
+    val dupCorpus: Set[Any] =
+      if (probeRows.isEmpty) Set.empty
+      else {
+        val newBands = spark.createDataFrame(
+          java.util.Arrays.asList(probeRows: _*), StructType(Seq(
+            StructField("band", IntegerType, nullable = false),
+            StructField("bv", LongType, nullable = false),
+            idField.copy(name = "new_id"),
+            StructField("nhi", LongType), StructField("nlo", LongType))))
+        val bvs = probeRows.map(_.getLong(1)).distinct
+          .take(CorpusDedupIndex.MaxKeysInPredicate + 1)
+        corpusDups(bvs, newBands).collect().map(_.get(0)).toSet
+      }
+    // intra-batch pairs whose BOTH endpoints survived the corpus check
+    // (a corpus-dup must not bridge two components), each verified by
+    // the exact popcount; a pair of equal ids (which the distributed
+    // self-join drops) only labels that id with itself
+    def hamming(a: Row, b: Row): Int =
+      java.lang.Long.bitCount(a.getLong(1) ^ b.getLong(1)) +
+        java.lang.Long.bitCount(a.getLong(2) ^ b.getLong(2))
+    val edges = blocked.valuesIterator.flatMap { members =>
+      val ms = members.filter(live).map(rows(_))
+        .filterNot(r => dupCorpus(r.get(0)))
+      for (x <- ms.indices.iterator; y <- (x + 1 until ms.size).iterator
+           if hamming(ms(x), ms(y)) <= maxHamming)
+        yield (ms(x).get(0), ms(y).get(0))
+    }
+    val label = Clusters.localComponents(edges, ordering.get).toMap
+    val decided = rows.toSeq.map { r =>
+      val id = r.get(0)
+      val status =
+        if (dupCorpus(id)) "dup_corpus"
+        else if (label.get(id).exists(_ != id)) "dup_batch"
+        else "kept"
+      Row(id, status, if (status == "kept") 1L else 0L)
+    }
+    Some(spark.createDataFrame(java.util.Arrays.asList(decided: _*),
+      StructType(Seq(idField,
+        StructField("status", StringType, nullable = false),
+        StructField("kept", LongType, nullable = false)))))
+  }
+
+  /** [[dedupBatch]] as Spark jobs, for batches over the driver budget. */
+  private def distributedDecisions(hashes: DataFrame): DataFrame = {
+    val batch = hashes.persist(StorageLevel.MEMORY_AND_DISK)
     // the optional hot-bucket cap ([[ImageDedup.capBuckets]], off by
     // default) bounds the cross join too: a degenerate batch (all-black
     // frames) otherwise multiplies its hottest (band, bv) bucket
@@ -133,23 +254,12 @@ class FingerprintDedupIndex(
     // for them fall through to `kept`.
     val newBands = ImageDedup.capBuckets(bandRows(batch), maxBucketSize,
       "band", "bv")
-    val bvs = newBands.select("bv").distinct()
+    val bvs = newBands.select("bv").filter(col("bv").isNotNull).distinct()
       .limit(CorpusDedupIndex.MaxKeysInPredicate + 1)
       .collect().map(_.getLong(0)).toSeq
-    // corpus_id =!= new id: a REPLAYED streaming batch whose admit
-    // completed before the crash sees ITSELF in the index — without
-    // the guard every fingerprint would match itself as dup_corpus
-    val crossDup = prunedScan(bvs)
-      .select(col("band"), col("bv"), col(idCol).as("corpus_id"),
-        col("h_hi").as("chi"), col("h_lo").as("clo"))
-      .join(broadcast(newBands
+    val crossDup = corpusDups(bvs, newBands
         .select(col("band"), col("bv"), col(idCol).as("new_id"),
-          col("h_hi").as("nhi"), col("h_lo").as("nlo"))),
-        Seq("band", "bv"))
-      .filter(col("corpus_id") =!= col("new_id"))
-      .filter((bit_count(col("chi").bitwiseXOR(col("nhi"))) +
-        bit_count(col("clo").bitwiseXOR(col("nlo")))) <= maxHamming)
-      .select("new_id").distinct()
+          col("h_hi").as("nhi"), col("h_lo").as("nlo")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // intra-batch: pairs whose BOTH endpoints survived the corpus
     // check (a corpus-dup must not bridge two components), then

@@ -930,11 +930,11 @@ final class IncrementalTable(
         val targets = BloomIndex.pointTargets(
           analyzed, bloomedPhys.map(logicalOf).toSet)
           .map { case (l, vs) => physicalOf(l) -> vs }
-        if (targets.isEmpty) ranged
+        lazy val parts = bloomParts()
+        if (targets.isEmpty || parts.isEmpty) ranged
         else {
-          val blooms = spark.read
-            .option("recursiveFileLookup", "true").parquet(bloomsDir.toString)
-          val miss = BloomIndex.pruned(spark, blooms, ranged, targets)
+          val miss = BloomIndex.pruned(spark, spark.read.parquet(parts: _*),
+            ranged, targets)
           ranged.filterNot(miss)
         }
       }
@@ -1477,16 +1477,31 @@ final class IncrementalTable(
     */
   private def rewriteBlooms(keep: DataFrame => DataFrame): Unit = {
     recoverBlooms()
-    if (!fs.exists(bloomsDir)) return
+    val parts = if (fs.exists(bloomsDir)) bloomParts() else Nil
+    if (parts.isEmpty) return
     // a crashed prior tmp WRITE's leftovers must not ride into this
     // swap — duplicate (file, col) rows from different eras could
     // disagree. (A stranded COMPLETE tmp was already promoted by the
     // recovery above, so this delete only ever removes partial writes.)
     fs.delete(bloomsTmp, true)
     val nonce = java.util.UUID.randomUUID().toString.take(8)
-    keep(spark.read.option("recursiveFileLookup", "true").parquet(bloomsDir.toString))
+    keep(spark.read.parquet(parts: _*))
       .coalesce(1).write.parquet(new Path(bloomsTmp, nonce).toString)
     promoteBlooms()
+  }
+
+  /** The bloom store's data files, skipping hidden names (`_SUCCESS`,
+    * `.crc`, a crashed write's `_temporary`) at every level as Spark's
+    * own listing does. Reads name these files rather than the store:
+    * Spark treats an input root whose name starts with `_` as hidden
+    * and warns "All paths were ignored" on every such read.
+    */
+  private[lake] def bloomParts(): Seq[String] = {
+    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    def walk(dir: Path): Seq[String] = fs.listStatus(dir).toSeq
+      .filter(st => visible(st.getPath))
+      .flatMap(st => if (st.isDirectory) walk(st.getPath) else Seq(st.getPath.toString))
+    walk(bloomsDir)
   }
 
   private val bloomsTmp = new Path(path, "_blooms_tmp")

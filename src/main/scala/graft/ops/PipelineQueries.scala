@@ -1409,10 +1409,12 @@ object PipelineQueries {
       val b1 = slice(1)
       val d1 = idx.dedupBatch(b1).localCheckpoint()
       idx.admit(b1, d1)
-      // REBALANCE before the write (guide §6: coalesce on write): the
-      // decisions frame inherits dedupBatch's full shuffle partitioning
-      // (32+ near-empty partitions for a few hundred rows at test
-      // scale), and every later snapshot() pays the per-file open cost
+      // REBALANCE before the write (guide §6: coalesce on write): a
+      // distributed dedupBatch's decisions inherit its full shuffle
+      // partitioning (32+ near-empty partitions for a few hundred rows
+      // at test scale; a small 64-bit batch decided on the driver is a
+      // local relation, which the hint sizes the same way), and every
+      // later snapshot() pays the per-file open cost
       // — measured 66 tiny files / 0.22 s warm snapshot vs 4 files /
       // 0.05 s on the arcs that came out right-sized. AQE sizes the
       // rebalanced partitions by bytes, so a genuinely large batch
@@ -1435,7 +1437,7 @@ object PipelineQueries {
     * from the closed-form fingerprints.
     */
   def mediaDedupIncremental(spark: SparkSession, dir: String): DataFrame =
-    incDedupArc(spark, dir, "mediainc4",
+    incDedupArc(spark, dir, "mediainc5",
       base => new graft.dedup.FingerprintDedupIndex(spark, base, "doc_id",
         maxHamming = 3, bandBits = 16)) {
       mediaHashCache.get(spark, dir + "#image") {

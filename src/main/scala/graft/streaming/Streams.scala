@@ -140,9 +140,9 @@ object Streams {
             Some(d)
           }
         // admit from the frozen rows: the in-hand frame on the fresh
-        // path (dedupBatch localCheckpoints, so it IS what was just
-        // committed — no re-scan of the growing decisions table per
-        // batch), the stored rows only on the replay path
+        // path (CorpusDedupIndex.dedupBatch localCheckpoints, so it IS
+        // what was just committed — no re-scan of the growing decisions
+        // table per batch), the stored rows only on the replay path
         val frozen = fresh.getOrElse(decisions.snapshot()
           .filter(col("batch") === batchId).drop("batch"))
         idx.admitIdempotent(batch, frozen, batchId)
@@ -274,6 +274,10 @@ object Streams {
               s"stream_fp_dedup[batch=$batchId]", schema = Some(rows.schema))
             Some(d)
           }
+        // admit from the frozen rows: every index's dedupBatch returns
+        // materialized decisions (a localCheckpoint, or a local
+        // relation for a small batch FingerprintDedupIndex decided on
+        // the driver), so the in-hand frame IS what was just committed
         val frozen = fresh.getOrElse(decisions.snapshot()
           .filter(col("batch") === batchId).drop("batch"))
         idx.admitIdempotent(batch, frozen, batchId)

@@ -52,6 +52,30 @@ class FingerprintDedupIndexSpec extends AnyFunSuite with SparkSpec {
       12L -> "dup_batch", 13L -> "kept"))
   }
 
+  test("a 48-row batch decides on the driver: at most 3 Spark jobs, and " +
+    "collecting its decisions runs none") {
+    val rnd = new scala.util.Random(48)
+    def fp(): (Long, Long) = (rnd.nextLong() >>> 32, rnd.nextLong() >>> 32)
+    val corpus = (0L until 500L).map(i => (i, fp()))
+    val idx = freshIndex()
+    idx.bootstrap(fps(corpus.map { case (i, (h, l)) => (i, h, l) }: _*))
+    // 8 corpus near-dups, 8 intra-batch pairs, 24 fresh fingerprints
+    val planted = corpus.take(8).map { case (_, f) => near(f, 5L) }
+    val paired = Seq.fill(8)(fp()).flatMap(f => Seq(f, near(f, 1L)))
+    val fresh = Seq.fill(24)(fp())
+    val batch = fps((planted ++ paired ++ fresh).zipWithIndex
+      .map { case ((h, l), i) => (1000L + i, h, l) }: _*)
+    var d: DataFrame = null
+    val jobs = jobsDuring { d = idx.dedupBatch(batch) }
+    assert(jobs <= 3, s"dedupBatch ran $jobs Spark jobs")
+    var got = Map.empty[Long, String]
+    assert(jobsDuring { got = decisionMap(d) } === 0)
+    assert(got.size === 48)
+    assert((1000L until 1008L).forall(got(_) == "dup_corpus"))
+    assert((0 until 8).forall(k => got(1008L + 2 * k) == "kept" &&
+      got(1009L + 2 * k) == "dup_batch"))
+  }
+
   test("admit grows the index: batch 2 dups against batch 1's kept; " +
     "batch-1 dups are NOT anchors") {
     val idx = freshIndex()

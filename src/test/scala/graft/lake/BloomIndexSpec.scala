@@ -109,8 +109,8 @@ class BloomIndexSpec extends AnyFunSuite with SparkSpec {
     val all = t.files(t.latestVersion.get)
     assert(all.size === 12 && t.snapshot().count() === 12)
     // every file carries a bloom row — no writer's index was lost
-    val blooms = spark.read.option("recursiveFileLookup", "true")
-      .parquet(t.path + "/_blooms").select("file").as[String].collect().toSet
+    val blooms = spark.read.parquet(t.bloomParts(): _*)
+      .select("file").as[String].collect().toSet
     assert(all.toSet.subsetOf(blooms), s"missing blooms: ${all.toSet -- blooms}")
     // a point lookup prunes to ~1 file and finds its row
     val kept = t.prunedFiles(all, Seq(col("key") === "w2-k1"))

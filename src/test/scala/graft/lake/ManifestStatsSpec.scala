@@ -3,7 +3,6 @@ package graft.lake
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,35 +18,6 @@ import graft.SparkSpec
   */
 class ManifestStatsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
-
-  private def sc = spark.sparkContext
-
-  /** Spark jobs started by `op`: the job-id distance between two marker
-    * jobs run before and after it (listener events arrive in order, so
-    * once the second marker is seen every job of `op` has been too).
-    */
-  private def jobsDuring(op: => Unit): Int = {
-    val ids = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .filter(_.startsWith("jobs-marker-")).foreach(d => ids.put(d, e.jobId))
-    }
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("jobs-marker-a")
-      op
-      marker("jobs-marker-b")
-      val deadline = System.currentTimeMillis() + 30000
-      while (!ids.containsKey("jobs-marker-b") && System.currentTimeMillis() < deadline)
-        Thread.sleep(10)
-      ids.get("jobs-marker-b") - ids.get("jobs-marker-a") - 1
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** WARN messages `op` logs through IncrementalTable's logger. */
   private def warnsDuring(op: => Unit): Seq[String] = {
