@@ -7,38 +7,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
-import graft.lake.IncrementalTable
+import graft.dedup.DedupIndex.{prunedScan, sampleKeys}
+import graft.lake.{IncrementalTable, IncrementalView}
 import graft.multimodal.ImageDedup
-
-/** The streaming sink's (and any daily-ingest driver's) view of a
-  * persistent fingerprint index — implemented by BOTH hash widths
-  * ([[FingerprintDedupIndex]] for 64-bit halves,
-  * [[FingerprintDedupIndex256]] for limb arrays), so one
-  * decisions-first exactly-once protocol
-  * ([[graft.streaming.Streams.mediaDedupSink]]) serves either.
-  */
-trait FingerprintIndexLike {
-  def fpTable: graft.lake.IncrementalTable
-  def exists: Boolean
-  def bootstrap(hashes: DataFrame): Unit
-  def dedupBatch(hashes: DataFrame): DataFrame
-  def admit(hashes: DataFrame, decisions: DataFrame): Unit
-  def admitIdempotent(hashes: DataFrame, decisions: DataFrame,
-      batchId: Long): Unit
-
-  /** Name of the id column decision rows carry. */
-  def decisionIdCol: String
-
-  /** True when [[dedupBatch]] decides per CLIP from multiple unit
-    * rows (the [[SignatureDedupIndex]] shape) — such an index requires
-    * every clip's unit rows to arrive inside one batch, and the
-    * streaming sink ENFORCES that (a straddled clip would be judged
-    * fragment by fragment, each fragment falling under `minMatched`
-    * and accreting conflicting decision rows). Per-ROW indexes carry
-    * no such requirement.
-    */
-  def decidesPerClip: Boolean = false
-}
 
 /** Persistent Hamming-fingerprint index for INCREMENTAL media
   * near-duplicate detection — [[CorpusDedupIndex]]'s daily-ingest
@@ -60,80 +31,39 @@ trait FingerprintIndexLike {
   *
   * [[dedupBatch]] touches O(batch) + the index scan: the batch's band
   * rows broadcast against the scan (the big side streams, never
-  * shuffles), exact Hamming re-check inline, decisions:
-  *
-  *  - `dup_corpus`: within `maxHamming` of an indexed fingerprint;
-  *  - `dup_batch`: among the rest, intra-batch near-dup pairs close
-  *    into connected components and every member but the min id drops;
-  *  - `kept`: everything else — [[admit]] appends its band rows, so
-  *    the NEXT batch deduplicates against corpus ∪ kept.
-  *
-  * A batch within `graft.cc.localEdgeThreshold` ([[Clusters]]) is
-  * decided on the driver around that one scan; a larger one, or one
-  * whose id type has no driver ordering, takes the distributed plan.
-  * Both give the same decisions.
+  * shuffles), exact Hamming re-check inline; `dup_corpus` means within
+  * `maxHamming` of an indexed fingerprint (the [[DedupIndex]] protocol
+  * otherwise). A batch within `graft.cc.localEdgeThreshold`
+  * ([[Clusters]]) is decided on the driver around that one scan; a
+  * larger one, or one whose id type has no driver ordering, takes the
+  * distributed plan. Both give the same decisions.
   *
   * Deterministic integer arithmetic end to end, so a plain-SQL oracle
   * replays the whole multi-batch arc bit-for-bit (the
   * `media_dedup_incremental` gate).
   */
 class FingerprintDedupIndex(
-    spark: SparkSession, val base: String, idCol: String,
+    spark: SparkSession, val base: String, val idCol: String,
     maxHamming: Int, bandBits: Int = 16,
     maxBucketSize: Int = Int.MaxValue) extends FingerprintIndexLike {
-
-  def decisionIdCol: String = idCol
 
   ImageDedup.requireExactPigeonhole(maxHamming, bandBits)
   require(maxBucketSize >= 1, s"maxBucketSize=$maxBucketSize must be >= 1")
 
   val fpTable = new IncrementalTable(spark, s"$base/fps")
+  protected def admitTag: String = "fp_admit"
 
-  /** Bootstrapped means a DATA-BEARING commit exists, not just the
-    * write-order config (version 0): a crash between
-    * [[bootstrap]]'s setWriteOrder and its append must not leave a
-    * permanently "bootstrapped" EMPTY index that silently returns
-    * zero corpus recall forever — re-running bootstrap completes it
-    * instead.
-    */
-  def exists: Boolean = fpTable.exists && fpTable.latestVersion.exists(_ >= 1)
-
-  private def bandRows(hashes: DataFrame): DataFrame =
+  protected def bandRows(hashes: DataFrame): DataFrame =
     ImageDedup.bandExploded(
       hashes.select(col(idCol), col("h_hi"), col("h_lo")), bandBits)
       .select(col("band"), col("bv"), col(idCol), col("h_hi"), col("h_lo"))
 
-  /** Build the index from the initial corpus' fingerprints
-    * `(idCol, h_hi, h_lo)`. One append riding the declared write
-    * order — one shuffle of the INDEX ROWS, tight file bounds from
-    * birth.
-    */
-  def bootstrap(hashes: DataFrame): Unit = {
-    require(!exists, s"fingerprint index at $base is already bootstrapped")
-    // a half-bootstrapped table (config committed, crash before the
-    // data landed) resumes here: the write order is already declared
-    if (!fpTable.exists) fpTable.setWriteOrder("band", "bv")
-    fpTable.append(bandRows(hashes))
-  }
-
-  /** Stats-prune + scan the index by the batch's band-value set (the
-    * [[CorpusDedupIndex.MaxKeysInPredicate]] rule); a large set falls
-    * back to the full (narrow) scan — slower, never wrong.
-    */
-  private def prunedScan(bvs: Seq[Any]): DataFrame =
-    if (bvs.nonEmpty && bvs.size <= CorpusDedupIndex.MaxKeysInPredicate)
-      fpTable.scan(col("bv").isInCollection(bvs))
-    else fpTable.snapshot()
-
   /** The batch band rows `(band, bv, new_id, nhi, nlo)` within
     * `maxHamming` of an indexed fingerprint other than themselves, as
-    * distinct `new_id`s. `corpus_id =!= new_id`: a REPLAYED streaming
-    * batch whose admit completed before the crash sees ITSELF in the
-    * index — without the guard every fingerprint would match itself as
-    * dup_corpus.
+    * distinct `new_id`s (the replayed-batch self-match guard included).
     */
   private def corpusDups(bvs: Seq[Any], newBands: DataFrame): DataFrame =
-    prunedScan(bvs)
+    prunedScan(fpTable, "bv", bvs)
       .select(col("band"), col("bv"), col(idCol).as("corpus_id"),
         col("h_hi").as("chi"), col("h_lo").as("clo"))
       .join(broadcast(newBands), Seq("band", "bv"))
@@ -142,12 +72,9 @@ class FingerprintDedupIndex(
         bit_count(col("clo").bitwiseXOR(col("nlo")))) <= maxHamming)
       .select("new_id").distinct()
 
-  /** Near-dup decisions for a batch of fingerprints against the index
-    * ∪ the batch itself: one row per batch row,
-    * `(idCol, status ∈ kept|dup_corpus|dup_batch, kept 0|1)`; a NULL id
-    * or a fingerprint with a NULL half matches nothing and is `kept`.
-    * Call [[admit]] with the SAME hashes and the returned decisions to
-    * make the kept fingerprints visible to the next batch.
+  /** Decisions for a batch of fingerprints `(idCol, h_hi, h_lo)`, one
+    * row per batch row; a NULL id or a fingerprint with a NULL half
+    * matches nothing and is `kept`.
     *
     * The returned frame is materialized either way. A batch whose band
     * rows and candidate pairs both fit `graft.cc.localEdgeThreshold`
@@ -159,7 +86,7 @@ class FingerprintDedupIndex(
     * `localCheckpoint`); `graft.cc.localEdgeThreshold=0` forces it.
     */
   def dedupBatch(hashes: DataFrame): DataFrame = {
-    require(exists, s"fingerprint index at $base is not bootstrapped")
+    requireBootstrapped()
     val batch = hashes.select(col(idCol), col("h_hi"), col("h_lo"))
     localDecisions(batch).getOrElse(distributedDecisions(batch))
   }
@@ -211,7 +138,7 @@ class FingerprintDedupIndex(
             idField.copy(name = "new_id"),
             StructField("nhi", LongType), StructField("nlo", LongType))))
         val bvs = probeRows.map(_.getLong(1)).distinct
-          .take(CorpusDedupIndex.MaxKeysInPredicate + 1)
+          .take(IncrementalView.MaxKeysInPredicate + 1)
         corpusDups(bvs, newBands).collect().map(_.get(0)).toSet
       }
     // intra-batch pairs whose BOTH endpoints survived the corpus check
@@ -254,67 +181,14 @@ class FingerprintDedupIndex(
     // for them fall through to `kept`.
     val newBands = ImageDedup.capBuckets(bandRows(batch), maxBucketSize,
       "band", "bv")
-    val bvs = newBands.select("bv").filter(col("bv").isNotNull).distinct()
-      .limit(CorpusDedupIndex.MaxKeysInPredicate + 1)
-      .collect().map(_.getLong(0)).toSeq
-    val crossDup = corpusDups(bvs, newBands
-        .select(col("band"), col("bv"), col(idCol).as("new_id"),
-          col("h_hi").as("nhi"), col("h_lo").as("nlo")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // intra-batch: pairs whose BOTH endpoints survived the corpus
-    // check (a corpus-dup must not bridge two components), then
-    // min-label connected components
+    val crossDup = corpusDups(
+      sampleKeys(newBands.select("bv").filter(col("bv").isNotNull)),
+      newBands.select(col("band"), col("bv"), col(idCol).as("new_id"),
+        col("h_hi").as("nhi"), col("h_lo").as("nlo")))
     val intraPairs = ImageDedup
       .nearDupPairs(batch, idCol, maxHamming, bandBits, maxBucketSize)
-      .join(crossDup.withColumnRenamed("new_id", "id_a"), Seq("id_a"),
-        "left_anti")
-      .join(crossDup.withColumnRenamed("new_id", "id_b"), Seq("id_b"),
-        "left_anti")
       .select(col("id_a").as("a"), col("id_b").as("b"))
-    val comps = Clusters.connectedComponents(intraPairs)
-    val decisions = batch.select(col(idCol))
-      .join(crossDup.withColumnRenamed("new_id", idCol)
-        .withColumn("__dc", lit(1)), Seq(idCol), "left")
-      .join(comps.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .select(col(idCol),
-        when(col("__dc") === 1, lit("dup_corpus"))
-          .when(col("cluster_id").isNotNull && col("cluster_id") =!= col(idCol),
-            lit("dup_batch"))
-          .otherwise(lit("kept")).as("status"))
-      .withColumn("kept", (col("status") === "kept").cast("long"))
-      // materialize BEFORE releasing the intermediates (the
-      // CorpusDedupIndex leak rule: a daemon calls this per batch)
-      .localCheckpoint()
-    Seq(batch, crossDup).foreach(_.unpersist(blocking = false))
-    decisions
-  }
-
-  /** Append the KEPT fingerprints' band rows — the next [[dedupBatch]]
-    * sees corpus ∪ kept. One manifest commit; with `batchId`
-    * ([[admitIdempotent]]) the commit carries an `fp_admit[batch=N]`
-    * watermark and a replayed batch no-ops, so a crash anywhere in the
-    * stream replays to exactly-once index contents (single table — no
-    * commit-ordering protocol needed, unlike the three-table text
-    * index).
-    */
-  def admit(hashes: DataFrame, decisions: DataFrame): Unit =
-    admitImpl(hashes, decisions, None)
-
-  def admitIdempotent(hashes: DataFrame, decisions: DataFrame,
-      batchId: Long): Unit = admitImpl(hashes, decisions, Some(batchId))
-
-  private def admitImpl(hashes: DataFrame, decisions: DataFrame,
-      batchId: Option[Long]): Unit = {
-    val keptIds = decisions.filter(col("kept") === 1L).select(idCol)
-    val kept = hashes.join(broadcast(keptIds), Seq(idCol), "left_semi")
-    val rows = bandRows(kept)
-    batchId match {
-      case None => fpTable.append(rows)
-      case Some(id) =>
-        if (!FingerprintDedupIndex.admitWatermark(fpTable).exists(id <= _))
-          fpTable.commitFiles(fpTable.stage(fpTable.orderForWrite(rows)),
-            Set.empty, s"fp_admit[batch=$id]", schema = Some(rows.schema))
-    }
+    decide(batch.select(col(idCol)), crossDup, intraPairs, batch)
   }
 
   /** Radius-bounded k-NN retrieval AGAINST THE PERSISTED INDEX — the
@@ -332,7 +206,7 @@ class FingerprintDedupIndex(
     * so results equal a brute-force scan's.
     */
   def knnAgainstIndex(probes: DataFrame, k: Int, radius: Int): DataFrame = {
-    require(exists, s"fingerprint index at $base is not bootstrapped")
+    requireBootstrapped()
     ImageDedup.requireExactPigeonhole(radius, bandBits)
     require(k >= 1, s"k=$k must be >= 1")
     val pBandsDf = bandRows(
@@ -347,10 +221,10 @@ class FingerprintDedupIndex(
     // IvfIndex.topK fusion).
     val pRows = pBandsDf.collect()
     val bvs = pRows.iterator.map(_.getLong(1)).toSet
-      .take(CorpusDedupIndex.MaxKeysInPredicate + 1).toSeq
+      .take(IncrementalView.MaxKeysInPredicate + 1).toSeq
     val pBands = probes.sparkSession.createDataFrame(
       java.util.Arrays.asList(pRows: _*), pBandsDf.schema)
-    val scored = prunedScan(bvs)
+    val scored = prunedScan(fpTable, "bv", bvs)
       .join(broadcast(pBands), Seq("band", "bv"))
       .filter(col(idCol) =!= col("probe_id"))
       .select(col("probe_id"), col(idCol).as("nn_id"),
@@ -362,27 +236,4 @@ class FingerprintDedupIndex(
       .filter(col("hamming") <= radius)
     graft.multimodal.HammingKnn.topKFinish(scored, k)
   }
-
-  /** TAKEDOWN (the [[CorpusDedupIndex.remove]] contract): a removed
-    * fingerprint must not stay a ghost anchor rejecting future
-    * near-dups of media that no longer exists. A fingerprint's rows
-    * are SPREAD across every band, so a copy-on-write rewrite would be
-    * O(table) — a deletion vector masks them instead (merge-on-read;
-    * [[dedupBatch]] reads through `scan`/`snapshot`, which apply
-    * vectors). Idempotent: an empty delete no-ops.
-    */
-  def remove(ids: Seq[Any]): Unit = {
-    require(exists, s"fingerprint index at $base is not bootstrapped")
-    require(ids.nonEmpty, "remove: empty id set")
-    fpTable.deleteVector(col(idCol).isInCollection(ids))
-  }
-}
-
-object FingerprintDedupIndex {
-  private val AdmitOp = """fp_admit\[batch=(\d+)\]""".r
-
-  /** Newest `fp_admit` micro-batch id committed (the shared
-    * [[IncrementalTable.latestOpId]] high-watermark walk). */
-  private[graft] def admitWatermark(t: IncrementalTable): Option[Long] =
-    t.latestOpId(AdmitOp)
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.lake.IncrementalTable
+import graft.dedup.DedupIndex.{prunedScan, sampleKeys}
+import graft.lake.{IncrementalTable, IncrementalView}
 import graft.multimodal.ImageDedup
 
 /** [[FingerprintDedupIndex]] for 256-BIT limb fingerprints
@@ -21,13 +22,10 @@ import graft.multimodal.ImageDedup
   * [[ImageDedup.nearDupPairs256]] verify shape, against a persisted
   * corpus side.
   *
-  * Everything else is the 64-bit index's audited protocol, verbatim:
-  * ONE manifest-committed write-ordered table (files born clustered
-  * on (band, bv), stats-pruned batch scans), the batch side
-  * broadcasts (the index streams, never shuffles), decisions
-  * `dup_corpus` / `dup_batch` (min-label components) / `kept`,
-  * `fp256_admit[batch=N]`-watermarked idempotent admits, merge-on-read
-  * takedown. Deterministic integer arithmetic end to end — the
+  * Everything else is the 64-bit index's: the [[FingerprintIndexLike]]
+  * single-table layout, the batch side broadcast against the index
+  * scan, admits watermarked `fp256_admit[batch=N]`. Deterministic
+  * integer arithmetic end to end — the
   * `media_dedup_incremental256` oracle replays the full multi-batch
   * arc bit-for-bit.
   *
@@ -42,46 +40,27 @@ import graft.multimodal.ImageDedup
   * matters, and it stays flat in index size.
   */
 class FingerprintDedupIndex256(
-    spark: SparkSession, val base: String, idCol: String,
+    spark: SparkSession, val base: String, val idCol: String,
     maxHamming: Int, maxBucketSize: Int = Int.MaxValue)
     extends FingerprintIndexLike {
-
-  def decisionIdCol: String = idCol
 
   require(maxHamming >= 0 && maxHamming < 16,
     s"maxHamming=$maxHamming: the 16-limb pigeonhole is exact only " +
       "for thresholds < 16")
 
   val fpTable = new IncrementalTable(spark, s"$base/fps")
+  protected def admitTag: String = "fp256_admit"
 
-  /** Data-bearing commit exists (the [[FingerprintDedupIndex.exists]]
-    * crash-convergence rule: a half-bootstrapped empty table must not
-    * read as bootstrapped).
-    */
-  def exists: Boolean = fpTable.exists && fpTable.latestVersion.exists(_ >= 1)
-
-  private def bandRows(hashes: DataFrame): DataFrame =
+  protected def bandRows(hashes: DataFrame): DataFrame =
     hashes.select(col(idCol), col("fp"))
       .select(posexplode(col("fp")).as(Seq("band", "bv")),
         col(idCol), col("fp"))
 
-  def bootstrap(hashes: DataFrame): Unit = {
-    require(!exists, s"fingerprint index at $base is already bootstrapped")
-    if (!fpTable.exists) fpTable.setWriteOrder("band", "bv")
-    fpTable.append(bandRows(hashes))
-  }
-
-  private def prunedScan(bvs: Seq[Any]): DataFrame =
-    if (bvs.nonEmpty && bvs.size <= CorpusDedupIndex.MaxKeysInPredicate)
-      fpTable.scan(col("bv").isInCollection(bvs))
-    else fpTable.snapshot()
-
-  /** Near-dup decisions for a batch of `(idCol, fp)` fingerprints
-    * against the index ∪ the batch itself — the 64-bit
+  /** Decisions for a batch of `(idCol, fp)` fingerprints — the 64-bit
     * [[FingerprintDedupIndex.dedupBatch]] contract on limbs.
     */
   def dedupBatch(hashes: DataFrame): DataFrame = {
-    require(exists, s"fingerprint index at $base is not bootstrapped")
+    requireBootstrapped()
     val batch = hashes.select(col(idCol), col("fp"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val allLimbs = batch.select(col(idCol).as("new_id"),
@@ -92,13 +71,10 @@ class FingerprintDedupIndex256(
     // into false dup_corpus decisions (the nearDupPairs256 contract)
     val newLimbs = ImageDedup.capBuckets(allLimbs, maxBucketSize,
       "band", "bv")
-    val bvs = newLimbs.select("bv").distinct()
-      .limit(CorpusDedupIndex.MaxKeysInPredicate + 1)
-      .collect().map(_.getLong(0)).toSeq
     // candidates: a shared (band, limb-value); the corpus row CARRIES
     // its full array, so the verify below needs no second index scan.
     // corpus_id =!= new_id: the replayed-batch self-match guard
-    val cand = prunedScan(bvs)
+    val cand = prunedScan(fpTable, "bv", sampleKeys(newLimbs.select("bv")))
       .select(col("band"), col("bv"), col(idCol).as("corpus_id"),
         col("fp").as("cfp"))
       .join(broadcast(newLimbs.select(col("band"), col("bv"),
@@ -121,48 +97,10 @@ class FingerprintDedupIndex256(
         (0 until 4).map(j => col(s"q$j"))))
       .filter(col("hamming") <= maxHamming)
       .select("new_id").distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val intraPairs = ImageDedup
       .nearDupPairs256(batch, idCol, maxHamming, maxBucketSize)
-      .join(crossDup.withColumnRenamed("new_id", "id_a"), Seq("id_a"),
-        "left_anti")
-      .join(crossDup.withColumnRenamed("new_id", "id_b"), Seq("id_b"),
-        "left_anti")
       .select(col("id_a").as("a"), col("id_b").as("b"))
-    val comps = Clusters.connectedComponents(intraPairs)
-    val decisions = batch.select(col(idCol))
-      .join(crossDup.withColumnRenamed("new_id", idCol)
-        .withColumn("__dc", lit(1)), Seq(idCol), "left")
-      .join(comps.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .select(col(idCol),
-        when(col("__dc") === 1, lit("dup_corpus"))
-          .when(col("cluster_id").isNotNull && col("cluster_id") =!= col(idCol),
-            lit("dup_batch"))
-          .otherwise(lit("kept")).as("status"))
-      .withColumn("kept", (col("status") === "kept").cast("long"))
-      .localCheckpoint()
-    Seq(batch, crossDup).foreach(_.unpersist(blocking = false))
-    decisions
-  }
-
-  def admit(hashes: DataFrame, decisions: DataFrame): Unit =
-    admitImpl(hashes, decisions, None)
-
-  def admitIdempotent(hashes: DataFrame, decisions: DataFrame,
-      batchId: Long): Unit = admitImpl(hashes, decisions, Some(batchId))
-
-  private def admitImpl(hashes: DataFrame, decisions: DataFrame,
-      batchId: Option[Long]): Unit = {
-    val keptIds = decisions.filter(col("kept") === 1L).select(idCol)
-    val kept = hashes.join(broadcast(keptIds), Seq(idCol), "left_semi")
-    val rows = bandRows(kept)
-    batchId match {
-      case None => fpTable.append(rows)
-      case Some(id) =>
-        if (!FingerprintDedupIndex256.admitWatermark(fpTable).exists(id <= _))
-          fpTable.commitFiles(fpTable.stage(fpTable.orderForWrite(rows)),
-            Set.empty, s"fp256_admit[batch=$id]", schema = Some(rows.schema))
-    }
+    decide(batch.select(col(idCol)), crossDup, intraPairs, batch)
   }
 
   /** Radius-bounded k-NN retrieval against the persisted limb index —
@@ -174,7 +112,7 @@ class FingerprintDedupIndex256(
     * `radius < 16` keeps the candidate union pigeonhole-exact.
     */
   def knnAgainstIndex(probes: DataFrame, k: Int, radius: Int): DataFrame = {
-    require(exists, s"fingerprint index at $base is not bootstrapped")
+    requireBootstrapped()
     require(radius >= 0 && radius < 16,
       s"radius=$radius: the 16-limb pigeonhole is exact only below 16")
     require(k >= 1, s"k=$k must be >= 1")
@@ -185,10 +123,10 @@ class FingerprintDedupIndex256(
     // predicate AND rebuilds the broadcast side as a LocalRelation.
     val qRows = qLimbsDf.collect()
     val bvs = qRows.iterator.map(_.getLong(2)).toSet
-      .take(CorpusDedupIndex.MaxKeysInPredicate + 1).toSeq
+      .take(IncrementalView.MaxKeysInPredicate + 1).toSeq
     val qLimbs = probes.sparkSession.createDataFrame(
       java.util.Arrays.asList(qRows: _*), qLimbsDf.schema)
-    val cand = prunedScan(bvs)
+    val cand = prunedScan(fpTable, "bv", bvs)
       .select(col("band"), col("bv"), col(idCol).as("nn_id"),
         col("fp").as("cfp"))
       .join(broadcast(qLimbs.select(col("band"), col("bv"),
@@ -210,21 +148,4 @@ class FingerprintDedupIndex256(
       .select("probe_id", "nn_id", "hamming")
     graft.multimodal.HammingKnn.topKFinish(scored, k)
   }
-
-  /** Merge-on-read takedown, the [[FingerprintDedupIndex.remove]]
-    * contract (a fingerprint's 16 limb rows spread across every band;
-    * a deletion vector masks them in O(1) table work).
-    */
-  def remove(ids: Seq[Any]): Unit = {
-    require(exists, s"fingerprint index at $base is not bootstrapped")
-    require(ids.nonEmpty, "remove: empty id set")
-    fpTable.deleteVector(col(idCol).isInCollection(ids))
-  }
-}
-
-object FingerprintDedupIndex256 {
-  private val AdmitOp = """fp256_admit\[batch=(\d+)\]""".r
-
-  private[graft] def admitWatermark(t: IncrementalTable): Option[Long] =
-    t.latestOpId(AdmitOp)
 }

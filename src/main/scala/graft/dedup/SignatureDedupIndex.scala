@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.dedup.DedupIndex.{prunedScan, sampleKeys}
 import graft.lake.IncrementalTable
 import graft.multimodal.{ImageDedup, SignatureDedup}
 
@@ -20,74 +21,47 @@ import graft.multimodal.{ImageDedup, SignatureDedup}
   * within `maxHamming` on EACH side (a repeated unit cannot qualify
   * through multiplicity).
   *
-  * The decision protocol is the fingerprint indexes' verbatim:
-  * batch band rows broadcast against the pruned index scan (the big
-  * side streams), `dup_corpus` / `dup_batch` (intra-batch
-  * [[SignatureDedup]] pairs close into min-label components) /
-  * `kept`; admits append the kept clips' unit rows under a
-  * `sig_admit[batch=N]` watermark (idempotent replay); takedown masks
-  * a clip's unit rows merge-on-read. Implements
-  * [[FingerprintIndexLike]], so the decisions-first streaming sink
-  * ([[graft.streaming.Streams.mediaDedupSink]]) serves it unchanged —
-  * micro-batches of unit rows in, per-clip decisions out.
+  * Otherwise the [[FingerprintIndexLike]] layout: batch band rows
+  * broadcast against the pruned index scan, intra-batch
+  * [[SignatureDedup]] pairs for `dup_batch`, admits watermarked
+  * `sig_admit[batch=N]`. Decisions are per CLIP ([[decidesPerClip]]):
+  * micro-batches of unit rows in, one decision row per clip out.
   */
 class SignatureDedupIndex(
-    spark: SparkSession, val base: String, idCol: String, unitCol: String,
+    spark: SparkSession, val base: String, val idCol: String, unitCol: String,
     maxHamming: Int, minMatched: Int, bandBits: Int = 16,
     maxBucketSize: Int = Int.MaxValue) extends FingerprintIndexLike {
 
   ImageDedup.requireExactPigeonhole(maxHamming, bandBits)
   require(minMatched >= 1, s"minMatched=$minMatched must be >= 1")
 
-  def decisionIdCol: String = idCol
-
-  /** Decisions are per CLIP over multiple unit rows — the streaming
-    * sink enforces clip atomicity for this index (trait doc).
-    */
   override def decidesPerClip: Boolean = true
 
   val fpTable = new IncrementalTable(spark, s"$base/units")
+  protected def admitTag: String = "sig_admit"
 
-  /** Data-bearing commit exists (the shared crash-convergence rule). */
-  def exists: Boolean = fpTable.exists && fpTable.latestVersion.exists(_ >= 1)
-
-  private def bandRows(units: DataFrame): DataFrame =
+  protected def bandRows(units: DataFrame): DataFrame =
     ImageDedup.bandExploded(
       units.select(col(idCol), col(unitCol), col("h_hi"), col("h_lo")),
       bandBits)
       .select(col("band"), col("bv"), col(idCol), col(unitCol),
         col("h_hi"), col("h_lo"))
 
-  def bootstrap(units: DataFrame): Unit = {
-    require(!exists, s"signature index at $base is already bootstrapped")
-    if (!fpTable.exists) fpTable.setWriteOrder("band", "bv")
-    fpTable.append(bandRows(units))
-  }
-
-  private def prunedScan(bvs: Seq[Any]): DataFrame =
-    if (bvs.nonEmpty && bvs.size <= CorpusDedupIndex.MaxKeysInPredicate)
-      fpTable.scan(col("bv").isInCollection(bvs))
-    else fpTable.snapshot()
-
-  /** Near-dup decisions for a batch of unit rows `(idCol, unitCol,
-    * h_hi, h_lo)` against the index ∪ the batch itself: one row per
-    * batch CLIP, `(idCol, status ∈ kept|dup_corpus|dup_batch, kept)`.
+  /** Decisions for a batch of unit rows `(idCol, unitCol, h_hi, h_lo)`,
+    * one row per batch CLIP.
     */
   def dedupBatch(units: DataFrame): DataFrame = {
-    require(exists, s"signature index at $base is not bootstrapped")
+    requireBootstrapped()
     val batch = units
       .select(col(idCol), col(unitCol), col("h_hi"), col("h_lo"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val newBands = ImageDedup.capBuckets(bandRows(batch), maxBucketSize,
       "band", "bv")
-    val bvs = newBands.select("bv").distinct()
-      .limit(CorpusDedupIndex.MaxKeysInPredicate + 1)
-      .collect().map(_.getLong(0)).toSeq
     // matched unit pairs between batch clips and indexed clips: banded
     // candidates, exact popcount per collision, then the distinct
     // carries bare (clip, unit) tuples. corpus_id =!= new_id is the
     // replayed-batch self-match guard
-    val matched = prunedScan(bvs)
+    val matched = prunedScan(fpTable, "bv", sampleKeys(newBands.select("bv")))
       .select(col("band"), col("bv"), col(idCol).as("corpus_id"),
         col(unitCol).as("cu"), col("h_hi").as("chi"), col("h_lo").as("clo"))
       .join(broadcast(newBands
@@ -107,62 +81,10 @@ class SignatureDedupIndex(
         countDistinct(col("cu")).as("mc"))
       .filter(least(col("mn"), col("mc")) >= minMatched)
       .select("new_id").distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val intraPairs = SignatureDedup
       .nearDupPairsBySignature(batch, idCol, unitCol, maxHamming,
         minMatched, bandBits, maxBucketSize)
-      .join(crossDup.withColumnRenamed("new_id", "id_a"), Seq("id_a"),
-        "left_anti")
-      .join(crossDup.withColumnRenamed("new_id", "id_b"), Seq("id_b"),
-        "left_anti")
       .select(col("id_a").as("a"), col("id_b").as("b"))
-    val comps = Clusters.connectedComponents(intraPairs)
-    val decisions = batch.select(col(idCol)).distinct()
-      .join(crossDup.withColumnRenamed("new_id", idCol)
-        .withColumn("__dc", lit(1)), Seq(idCol), "left")
-      .join(comps.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .select(col(idCol),
-        when(col("__dc") === 1, lit("dup_corpus"))
-          .when(col("cluster_id").isNotNull && col("cluster_id") =!= col(idCol),
-            lit("dup_batch"))
-          .otherwise(lit("kept")).as("status"))
-      .withColumn("kept", (col("status") === "kept").cast("long"))
-      .localCheckpoint()
-    Seq(batch, crossDup).foreach(_.unpersist(blocking = false))
-    decisions
+    decide(batch.select(col(idCol)).distinct(), crossDup, intraPairs, batch)
   }
-
-  def admit(units: DataFrame, decisions: DataFrame): Unit =
-    admitImpl(units, decisions, None)
-
-  def admitIdempotent(units: DataFrame, decisions: DataFrame,
-      batchId: Long): Unit = admitImpl(units, decisions, Some(batchId))
-
-  private def admitImpl(units: DataFrame, decisions: DataFrame,
-      batchId: Option[Long]): Unit = {
-    val keptIds = decisions.filter(col("kept") === 1L).select(idCol)
-    val kept = units.join(broadcast(keptIds), Seq(idCol), "left_semi")
-    val rows = bandRows(kept)
-    batchId match {
-      case None => fpTable.append(rows)
-      case Some(id) =>
-        if (!SignatureDedupIndex.admitWatermark(fpTable).exists(id <= _))
-          fpTable.commitFiles(fpTable.stage(fpTable.orderForWrite(rows)),
-            Set.empty, s"sig_admit[batch=$id]", schema = Some(rows.schema))
-    }
-  }
-
-  /** Merge-on-read takedown of whole CLIPS (every unit row masked). */
-  def remove(ids: Seq[Any]): Unit = {
-    require(exists, s"signature index at $base is not bootstrapped")
-    require(ids.nonEmpty, "remove: empty id set")
-    fpTable.deleteVector(col(idCol).isInCollection(ids))
-  }
-}
-
-object SignatureDedupIndex {
-  private val AdmitOp = """sig_admit\[batch=(\d+)\]""".r
-
-  private[graft] def admitWatermark(t: IncrementalTable): Option[Long] =
-    t.latestOpId(AdmitOp)
 }

@@ -256,7 +256,8 @@ object IncrementalView {
   /** Above this many touched keys the driver-side predicate (and with
     * it file-level pruning) is abandoned for distributed semi/anti
     * joins — a bounded `collect`, same contract as the DML paths'
-    * touched-file sets.
+    * touched-file sets and the dedup indexes' key-set scans
+    * ([[graft.dedup.DedupIndex.prunedScan]]).
     */
   val MaxKeysInPredicate = 256
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -572,32 +572,14 @@ object PipelineQueries {
     * assignment, scoped LSH, exact cosine gates, recursive closures)
     * from the raw table in plain SQL.
     */
-  def semanticDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    import graft.lake.IncrementalTable
-    val src = new java.io.File(s"$dir/embeddings.parquet")
-    val key = java.lang.Integer.toHexString(
-      (dir, src.length, src.lastModified, "semdedupinc1").hashCode)
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_semdedup_$key"
-    val decisions = new IncrementalTable(spark, s"$base/decisions")
-    val complete = decisions.exists && decisions.latestVersion.contains(1L)
-    if (!complete) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      val emb = Tables.load(spark, dir, "embeddings")
-      val idx = new graft.sim.SemDedupIndex(spark, s"$base/index",
-        "vec_id", "embedding", k = 8, iterations = 3, num = 2, den = 5)
-      idx.bootstrap(emb.filter(col("vec_id") % 3 === 0))
-      val dec = new IncrementalTable(spark, s"$base/decisions")
-      val b1 = emb.filter(col("vec_id") % 3 === 1)
-      val d1 = idx.dedupBatch(b1).localCheckpoint()
-      idx.admit(b1, d1)
-      dec.append(d1.withColumn("batch", lit(1L)))
-      val b2 = emb.filter(col("vec_id") % 3 === 2)
-      dec.append(idx.dedupBatch(b2).withColumn("batch", lit(2L)))
+  def semanticDedupIncremental(spark: SparkSession, dir: String): DataFrame =
+    incDedupArc(spark, dir, "semdedupinc1",
+      base => new graft.sim.SemDedupIndex(spark, base, "vec_id",
+        "embedding", k = 8, iterations = 3, num = 2, den = 5),
+      source = "embeddings", slice = r => col("vec_id") % 3 === r,
+      out = Seq("vec_id", "batch", "kcluster", "status", "kept")) {
+      Tables.load(spark, dir, "embeddings")
     }
-    new IncrementalTable(spark, s"$base/decisions").snapshot()
-      .select("vec_id", "batch", "kcluster", "status", "kept")
-      .orderBy("vec_id")
-  }
 
   def annBruteTopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
@@ -1378,21 +1360,25 @@ object PipelineQueries {
     s"(CASE WHEN $g % 4 = 3 THEN 1 + ($id % 2) " +
       s"WHEN $g % 2 = 0 THEN $g % 3 ELSE $id % 3 END)"
 
-  /** The shared two-batch incremental-dedup GATE ARC behind all four
-    * `*_dedup_incremental` queries: bootstrap an index from slice 0 of
-    * the fingerprint/unit frame, drive slices 1 and 2 through
-    * dedupBatch→admit, persist the decisions, serve their snapshot
-    * (cached under /tmp keyed on corpus file identity + `tag` — bump
-    * the tag when the arc changes). Batch membership is
-    * [[incSliceExpr]] — routing group classes so `dup_corpus`,
-    * `dup_batch`, `kept` AND the index-growth path are all exercised
-    * by every gate.
+  /** The shared two-batch incremental-dedup GATE ARC behind every
+    * `*_dedup_incremental` query: bootstrap an index from slice 0 of
+    * the `rows` frame, drive slices 1 and 2 through dedupBatch→admit,
+    * persist the decisions, serve their `out` columns ordered by the
+    * first (cached under /tmp keyed on the `source` table's file
+    * identity + `tag` — bump the tag when the arc changes). The media
+    * arcs' batch membership is [[incSliceExpr]] — routing group classes
+    * so `dup_corpus`, `dup_batch`, `kept` AND the index-growth path are
+    * all exercised by every gate.
     */
   private def incDedupArc(spark: SparkSession, dir: String, tag: String,
-      mkIndex: String => graft.dedup.FingerprintIndexLike)(
-      sigs: => DataFrame): DataFrame = {
+      mkIndex: String => graft.dedup.DedupIndex,
+      source: String = "documents",
+      slice: Int => Column = r =>
+        expr(s"${incSliceExpr("doc_id", "(doc_id div 4)")} = $r"),
+      out: Seq[String] = Seq("doc_id", "batch", "status", "kept"))(
+      rows: => DataFrame): DataFrame = {
     import graft.lake.IncrementalTable
-    val src = new java.io.File(s"$dir/documents.parquet")
+    val src = new java.io.File(s"$dir/$source.parquet")
     val key = java.lang.Integer.toHexString(
       (dir, src.length, src.lastModified, tag).hashCode)
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_$key"
@@ -1400,13 +1386,12 @@ object PipelineQueries {
     val complete = decisions.exists && decisions.latestVersion.contains(1L)
     if (!complete) {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      val s = sigs
-      def slice(r: Int) = s.filter(
-        expr(s"${incSliceExpr("doc_id", "(doc_id div 4)")} = $r"))
+      val all = rows
+      def part(r: Int) = all.filter(slice(r))
       val idx = mkIndex(s"$base/index")
-      idx.bootstrap(slice(0))
+      idx.bootstrap(part(0))
       val dec = new IncrementalTable(spark, s"$base/decisions")
-      val b1 = slice(1)
+      val b1 = part(1)
       val d1 = idx.dedupBatch(b1).localCheckpoint()
       idx.admit(b1, d1)
       // REBALANCE before the write (guide §6: coalesce on write): a
@@ -1420,12 +1405,12 @@ object PipelineQueries {
       // rebalanced partitions by bytes, so a genuinely large batch
       // still writes multiple right-sized files.
       dec.append(d1.withColumn("batch", lit(1L)).hint("rebalance"))
-      dec.append(idx.dedupBatch(slice(2)).withColumn("batch", lit(2L))
+      dec.append(idx.dedupBatch(part(2)).withColumn("batch", lit(2L))
         .hint("rebalance"))
     }
     new IncrementalTable(spark, s"$base/decisions").snapshot()
-      .select("doc_id", "batch", "status", "kept")
-      .orderBy("doc_id")
+      .select(out.map(col): _*)
+      .orderBy(out.head)
   }
 
   /** INCREMENTAL media dedup
@@ -2110,32 +2095,14 @@ object PipelineQueries {
     * table (one append per batch), which doubles as the build-once
     * completion marker.
     */
-  def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    import graft.lake.IncrementalTable
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val key = java.lang.Integer.toHexString(
-      (dir, src.length, src.lastModified, "incdedup1").hashCode)
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_incdedup_$key"
-    val decisions = new IncrementalTable(spark, s"$base/decisions")
-    val complete = decisions.exists && decisions.latestVersion.contains(1L)
-    if (!complete) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
-      val idx = new CorpusDedupIndex(spark, s"$base/index",
-        "doc_id", "text", NGRAM, K, BANDS, num = 3, den = 10)
-      idx.bootstrap(docs.filter(col("doc_id") % 4 <= 1))
-      val dec = new IncrementalTable(spark, s"$base/decisions")
-      val b1 = docs.filter(col("doc_id") % 4 === 2)
-      val d1 = idx.dedupBatch(b1).localCheckpoint()
-      idx.admit(b1, d1)
-      dec.append(d1.withColumn("batch", lit(1L)))
-      val b2 = docs.filter(col("doc_id") % 4 === 3)
-      dec.append(idx.dedupBatch(b2).withColumn("batch", lit(2L)))
+  def dedupIncremental(spark: SparkSession, dir: String): DataFrame =
+    incDedupArc(spark, dir, "incdedup1",
+      base => new CorpusDedupIndex(spark, base, "doc_id", "text",
+        NGRAM, K, BANDS, num = 3, den = 10),
+      slice = r => if (r == 0) col("doc_id") % 4 <= 1
+        else col("doc_id") % 4 === r + 1) {
+      Tables.load(spark, dir, "documents").select("doc_id", "text")
     }
-    new IncrementalTable(spark, s"$base/decisions").snapshot()
-      .select("doc_id", "batch", "status", "kept")
-      .orderBy("doc_id")
-  }
 
   // ---------------- DuckDB oracle fragments ----------------
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.dedup.DedupIndex
+import graft.dedup.DedupIndex.{prunedScan, sampleKeys}
 import graft.lake.IncrementalTable
 
 /** Persistent SemDeDup index for INCREMENTAL semantic deduplication —
@@ -24,8 +26,9 @@ import graft.lake.IncrementalTable
   *              norms, write-ordered by id so the exact-cosine verify
   *              fetch (and a takedown `deleteWhere`) stats-prunes to
   *              the files holding candidate ids;
-  *  - `buckets` (kcluster, t, b, id) — per-cluster sign-LSH bucket
-  *              rows ([[CosineSim.signBucketRowsQ]], the shared
+  *  - `buckets` (kcluster, t, b, id) — the candidate table, committed
+  *              after `vecs`: per-cluster sign-LSH bucket rows
+  *              ([[CosineSim.signBucketRowsQ]], the shared
   *              deterministic hyperplane family), write-ordered by
   *              (kcluster, t, b) so a batch's bucket set prunes the
   *              scan to files it can collide with — and since a batch
@@ -44,13 +47,9 @@ import graft.lake.IncrementalTable
   * rule, since per-admit historical bucket sizes are unknowable and
   * the exact verify bounds the cost of any candidate that does arise.
   *
-  * Decisions per batch doc (the CorpusDedupIndex contract):
-  *  - `dup_corpus`: exact integer cosine ≥ num/den to an INDEXED
-  *    vector sharing a (kcluster, t, b);
-  *  - `dup_batch`: among survivors, verified intra-batch pairs form
-  *    connected components and every member but the minimum id drops;
-  *  - `kept`: the rest — [[admit]] appends exactly these, so the next
-  *    batch deduplicates against corpus ∪ kept.
+  * A pair is a duplicate when its exact integer cosine is ≥ num/den
+  * and it shares a (kcluster, t, b); the decisions follow the
+  * [[DedupIndex]] protocol and carry each vector's `kcluster`.
   *
   * DRIFT: appends never retrain, so a moving distribution silently
   * degrades the cluster scoping (vectors land in clusters whose
@@ -84,20 +83,13 @@ import graft.lake.IncrementalTable
   * gate.
   */
 class SemDedupIndex(
-    spark: SparkSession, val base: String, idCol: String, vecCol: String,
+    spark: SparkSession, val base: String, val idCol: String, vecCol: String,
     k: Int, iterations: Int, num: Long, den: Long,
-    planes: Int = 8, tables: Int = 4, maxBucketSize: Int = 1000) {
+    planes: Int = 8, tables: Int = 4, maxBucketSize: Int = 1000)
+    extends DedupIndex {
 
   val vecsTable = new IncrementalTable(spark, s"$base/vecs")
   val bucketsTable = new IncrementalTable(spark, s"$base/buckets")
-
-  /** Bootstrapped means the buckets table has a DATA-BEARING commit:
-    * buckets commit LAST in [[bootstrap]] (candidates come only from
-    * buckets), so this is the whole-index durability marker — the
-    * [[graft.dedup.CorpusDedupIndex.exists]] rule.
-    */
-  def exists: Boolean =
-    bucketsTable.exists && bucketsTable.latestVersion.exists(_ >= 1)
 
   private var centroidsCache: Array[Array[Long]] = null
 
@@ -126,13 +118,15 @@ class SemDedupIndex(
   private def bucketRows(qa: DataFrame): DataFrame =
     CosineSim.signBucketRowsQ(qa, centroids.head.length, planes, tables)
 
-  /** Train on the initial corpus and persist the index. One corpus
-    * pass for the training sample, one for assignment + bucketing;
-    * buckets commit LAST so a crash mid-bootstrap never leaves ids
-    * visible to matching without their verify-side vectors.
+  val indexTables = Seq(vecsTable -> Seq(idCol),
+    bucketsTable -> Seq("kcluster", "t", "b"))
+  protected def admitTag: String = "semdedup_admit"
+  def streamTag: String = "stream_semdedup"
+
+  /** Train k centroids on the initial corpus and persist them, with
+    * the corpus' mean assignment cosine as the drift baseline.
     */
-  def bootstrap(corpus: DataFrame): Unit = {
-    require(!exists, s"SemDedup index at $base is already bootstrapped")
+  override protected def train(corpus: DataFrame): Unit = {
     val q0 = corpus
       .select(col(idCol), CosineSim.quantize(col(vecCol)).as("q"))
       .withColumn("nrm", CosineSim.normQ(col("q")))
@@ -143,35 +137,26 @@ class SemDedupIndex(
       IvfAnn.centroidsDf(spark, cents)
         .write.mode("overwrite").parquet(s"$base/centroids")
       centroidsCache = cents
-      // drift baseline: the training corpus' mean assignment cosine
       val (n, s) = IvfIndex.meanAssignSim(spark, cents,
         q0.select(col("q").as("cq"), col("nrm").as("nb")))
       import spark.implicits._
       Seq((n, s)).toDF("n", "mean_sim")
         .coalesce(1).write.mode("overwrite").parquet(s"$base/stats")
-      val qa = q0
-        .transform(df => IvfAnn.assignLists(df,
-          IvfAnn.centroidsDf(spark, cents), idCol, "q"))
-        .withColumn("kcluster", col("list_id").cast("long"))
-        .drop("list_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (!vecsTable.exists) vecsTable.setWriteOrder(idCol)
-      vecsTable.writeSnapshot(qa.select(idCol, "kcluster", "q", "nrm"))
-      if (!bucketsTable.exists) bucketsTable.setWriteOrder("kcluster", "t", "b")
-      bucketsTable.writeSnapshot(
-        bucketRows(qa).select(col("kcluster"), col("t"), col("b"), col(idCol)))
-      qa.unpersist(blocking = false)
     } finally q0.unpersist(blocking = false)
   }
 
-  /** Near-dup decisions for `batch` against the index ∪ the batch
-    * itself: one row per batch vector,
-    * `(idCol, kcluster, status ∈ kept|dup_corpus|dup_batch, kept 0|1)`.
-    * Call [[admit]] with the SAME batch and the returned decisions to
-    * make the kept vectors visible to the next batch.
+  /** Index rows of a vector frame: (vecs, buckets). */
+  protected def indexRows(batch: DataFrame): Seq[DataFrame] = {
+    val qa = quantizeAssign(batch).localCheckpoint() // feeds both tables
+    Seq(qa.select(idCol, "kcluster", "q", "nrm"),
+      bucketRows(qa).select(col("kcluster"), col("t"), col("b"), col(idCol)))
+  }
+
+  /** Decisions for a batch of `(idCol, vecCol)` vectors, one row per
+    * vector, carrying the `kcluster` it was assigned to.
     */
   def dedupBatch(batch: DataFrame): DataFrame = {
-    require(exists, s"SemDedup index at $base is not bootstrapped")
+    requireBootstrapped()
     val qa = quantizeAssign(batch).localCheckpoint() // feeds 4 paths
     // batch bucket rows, hot-capped WITHIN the batch
     val bb = bucketRows(qa)
@@ -186,13 +171,10 @@ class SemDedupIndex(
     // kcluster predicate alone prunes the buckets scan to the files of
     // those clusters; the batch side broadcasts, the index side
     // streams (no shuffle of corpus rows).
-    val kcs = qa.select("kcluster").distinct()
-      .collect().map(_.getLong(0)).toSeq // bounded by k — model-sized
-    val idxB = bucketsTable.scan(col("kcluster").isInCollection(kcs))
+    val idxB = prunedScan(bucketsTable, "kcluster",
+        sampleKeys(qa.select("kcluster")))
       .withColumnRenamed(idCol, "corpus_id")
-    // corpus_id =!= new_id: the CorpusDedupIndex replay guard — a
-    // replayed streaming batch whose admit completed before a crash
-    // sees ITSELF in the index
+    // corpus_id =!= new_id: the replayed-batch self-match guard
     val crossCand = idxB
       .join(broadcast(bb.select(col(idCol).as("new_id"),
         col("kcluster"), col("t"), col("b"))),
@@ -202,17 +184,11 @@ class SemDedupIndex(
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // ---- verify cross candidates: exact integer cosine against the
-    // stats-pruned vecs slice (id-clustered files; a large candidate
-    // set degrades to the full narrow scan — slower, never wrong)
-    val candIds = crossCand.select("corpus_id").distinct()
-      .limit(SemDedupIndex.MaxKeysInPredicate + 1)
-      .collect().map(_.get(0)).toSeq
-    val idxV =
-      (if (candIds.nonEmpty && candIds.size <= SemDedupIndex.MaxKeysInPredicate)
-        vecsTable.scan(col(idCol).isInCollection(candIds))
-      else vecsTable.snapshot())
-        .select(col(idCol).as("corpus_id"),
-          col("q").as("cq"), col("nrm").as("cnrm"))
+    // stats-pruned vecs slice (id-clustered files)
+    val idxV = prunedScan(vecsTable, idCol,
+        sampleKeys(crossCand.select("corpus_id")))
+      .select(col(idCol).as("corpus_id"),
+        col("q").as("cq"), col("nrm").as("cnrm"))
     // two SLIM broadcasts (pair ids, then batch vectors), not one
     // pair×vector product: a dense batch can have hundreds of
     // candidates per vector, and carrying the quantized vector on
@@ -226,11 +202,8 @@ class SemDedupIndex(
         col("dot") * col("dot") * lit(den * den) >=
           lit(num * num) * col("nrm") * col("cnrm"))
       .select(col("new_id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // ---- intra-batch: verified pairs where BOTH endpoints survived
-    // the corpus check (a corpus-dup must not bridge two components),
-    // then min-label connected components
+    // ---- intra-batch: verified pairs within (cluster ∩ bucket)
     val intraVerified = bb.as("x").join(bb.as("y"),
         col("x.kcluster") === col("y.kcluster") &&
           col("x.t") === col("y.t") && col("x.b") === col("y.b") &&
@@ -242,79 +215,8 @@ class SemDedupIndex(
         col("dot") * col("dot") * lit(den * den) >=
           lit(num * num) * col("na") * col("nb"))
       .dropDuplicates("a", "b")
-      .join(crossDup.withColumnRenamed("new_id", "a"), Seq("a"), "left_anti")
-      .join(crossDup.withColumnRenamed("new_id", "b"), Seq("b"), "left_anti")
-      .select(col("a"), col("b"))
-    val comps = graft.dedup.Clusters.connectedComponents(intraVerified)
-
-    val decisions = qa.select(col(idCol), col("kcluster"))
-      .join(crossDup.withColumnRenamed("new_id", idCol)
-        .withColumn("__dc", lit(1)), Seq(idCol), "left")
-      .join(comps.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .select(col(idCol), col("kcluster"),
-        when(col("__dc") === 1, lit("dup_corpus"))
-          .when(col("cluster_id").isNotNull && col("cluster_id") =!= col(idCol),
-            lit("dup_batch"))
-          .otherwise(lit("kept")).as("status"))
-      .withColumn("kept", (col("status") === "kept").cast("long"))
-      // materialize BEFORE releasing intermediates (the daemon rule:
-      // leaked persists accrete across daily batches)
-      .localCheckpoint()
-    Seq(bb, crossCand, crossDup).foreach(_.unpersist(blocking = false))
-    decisions
-  }
-
-  /** Append the KEPT vectors' index rows, so the next [[dedupBatch]]
-    * sees corpus ∪ kept. Buckets commit LAST — candidates come only
-    * from buckets, so a vector is never visible to matching before its
-    * verify-side row is durable.
-    */
-  def admit(batch: DataFrame, decisions: DataFrame): Unit =
-    admitImpl(batch, decisions, None)
-
-  /** [[admit]] guarded by a per-table micro-batch watermark: each
-    * table commits with operation `semdedup_admit[batch=N]` and a
-    * replayed batch skips tables whose newest watermark covers N —
-    * with the buckets-last order and [[dedupBatch]]'s self-match
-    * guard, a crash anywhere in the admit sequence replays to
-    * exactly-once index contents.
-    */
-  def admitIdempotent(batch: DataFrame, decisions: DataFrame,
-      batchId: Long): Unit =
-    admitImpl(batch, decisions, Some(batchId))
-
-  private def admitImpl(batch: DataFrame, decisions: DataFrame,
-      batchId: Option[Long]): Unit = {
-    val keptIds = decisions.filter(col("kept") === 1L).select(idCol)
-    val kept = batch.join(broadcast(keptIds), Seq(idCol), "left_semi")
-    val qa = quantizeAssign(kept).localCheckpoint() // feeds both tables
-    def commit(t: IncrementalTable, rows: DataFrame): Unit = batchId match {
-      case None => t.append(rows)
-      case Some(id) =>
-        if (!SemDedupIndex.admitWatermark(t).exists(id <= _))
-          t.commitFiles(t.stage(t.orderForWrite(rows)), Set.empty,
-            s"semdedup_admit[batch=$id]", schema = Some(rows.schema))
-    }
-    commit(vecsTable, qa.select(idCol, "kcluster", "q", "nrm"))
-    commit(bucketsTable,
-      bucketRows(qa).select(col("kcluster"), col("t"), col("b"), col(idCol)))
-  }
-
-  /** TAKEDOWN: retract vectors (right-to-be-forgotten / license
-    * removal). `buckets` is clustered by (kcluster, t, b) — an id's
-    * rows are SPREAD across every table, so it takes a DELETION VECTOR
-    * (merge-on-read, no file rewritten); `vecs` is id-clustered, so a
-    * bounded id set stats-prunes `deleteWhere` (copy-on-write,
-    * O(touched)). Buckets FIRST: a crash mid-removal leaves the id
-    * invisible to candidate generation, never a ghost anchor whose
-    * verify row is gone; re-running is idempotent.
-    */
-  def remove(ids: Seq[Any]): Unit = {
-    require(exists, s"SemDedup index at $base is not bootstrapped")
-    require(ids.nonEmpty, "remove: empty id set")
-    val pred = col(idCol).isInCollection(ids)
-    bucketsTable.deleteVector(pred)
-    vecsTable.deleteWhere(pred)
+    decide(qa.select(col(idCol), col("kcluster")), crossDup, intraVerified,
+      bb, crossCand)
   }
 
   /** DRIFT ratio vs the bootstrap-time baseline (shared statistic and
@@ -323,7 +225,7 @@ class SemDedupIndex(
     * broadcast centroids — no vector shuffle.
     */
   def drift(samplePerMille: Int = 1000): IvfIndex.IvfDrift = {
-    require(exists, s"SemDedup index at $base is not bootstrapped")
+    requireBootstrapped()
     require(samplePerMille >= 1 && samplePerMille <= 1000,
       s"samplePerMille=$samplePerMille must be in [1, 1000]")
     val baseRow = spark.read.parquet(s"$base/stats").head
@@ -333,18 +235,4 @@ class SemDedupIndex(
     val (n, cur) = IvfIndex.meanAssignSim(spark, centroids, sample)
     IvfIndex.IvfDrift(baseRow.getDouble(1), cur, baseRow.getLong(0), n)
   }
-}
-
-object SemDedupIndex {
-  /** The shared driver-predicate rule: a value set at most this large
-    * becomes an `isin` the file stats can prune files with; anything
-    * larger falls back to a full scan of the (narrow) vecs table.
-    */
-  val MaxKeysInPredicate = 256
-
-  private val AdmitOp = """semdedup_admit\[batch=(\d+)\]""".r
-
-  /** Newest `semdedup_admit` micro-batch id committed to `t`. */
-  private[graft] def admitWatermark(t: IncrementalTable): Option[Long] =
-    t.latestOpId(AdmitOp)
 }

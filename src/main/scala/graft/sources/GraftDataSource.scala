@@ -6,7 +6,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession, SQLContext}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetDataSourceV2
+import org.apache.spark.sql.execution.datasources.{InMemoryFileIndex, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetDataSourceV2, ParquetTable}
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -242,6 +243,25 @@ class GraftDataSource extends TableProvider
 private[sources] class GraftVersionedParquet extends ParquetDataSourceV2 {
 
   override def shortName(): String = "graft"
+
+  /** A version with no data files (an empty `CREATE TABLE` v0) reads
+    * as an empty table of its tracked schema through a file index over
+    * no roots. Handing parquet the empty path list instead makes
+    * Spark's path check log "All paths were ignored" on every read.
+    */
+  override def getTable(options: CaseInsensitiveStringMap,
+      schema: StructType): Table = {
+    val paths = getPaths(options)
+    val name = getTableName(options, paths)
+    val opts = getOptionsWithoutPaths(options)
+    if (paths.nonEmpty || schema == null)
+      ParquetTable(name, sparkSession, opts, paths, Option(schema), fallbackFileFormat)
+    else new ParquetTable(name, sparkSession, opts, paths, Some(schema),
+        fallbackFileFormat) {
+      override lazy val fileIndex: PartitioningAwareFileIndex =
+        new InMemoryFileIndex(sparkSession, Nil, Map.empty, userSpecifiedSchema)
+    }
+  }
 
   override def getPaths(map: CaseInsensitiveStringMap): Seq[String] = {
     val roots = super.getPaths(map)

@@ -95,173 +95,68 @@ object Streams {
     }
   }
 
-  /** Exactly-once STREAMING corpus dedup: each micro-batch is deduped
-    * against the persisted [[graft.dedup.CorpusDedupIndex]], its kept
-    * docs admitted, and its per-doc decisions appended to `decisions`
-    * — the continuous-ingest form of the `dedup_incremental` batch arc.
+  /** Exactly-once STREAMING dedup over any [[graft.dedup.DedupIndex]]:
+    * each micro-batch is deduped against the persisted index, its
+    * per-unit decisions appended to `decisions`, and its kept units
+    * admitted — the continuous-ingest form of the batch
+    * `*_dedup_incremental` arcs.
     *
     * Idempotence is layered with the DECISIONS COMMIT FIRST as the
     * anchor: `dedupBatch` has no side effects, so a crash before the
     * decisions commit replays the whole unit against an UNCHANGED
-    * index; the `stream_dedup[batch=N]` watermark then freezes the
+    * index; the `<idx.streamTag>[batch=N]` watermark then freezes the
     * kept set, and the admit — which runs AFTER that commit and
-    * OUTSIDE its gate on every delivery — replays from the frozen
-    * rows under [[graft.dedup.CorpusDedupIndex.admitIdempotent]]'s
-    * own per-table watermarks (bands-last commit order keeps
-    * half-admitted docs invisible to candidate generation) until it
+    * OUTSIDE its gate on every delivery — replays from the frozen rows
+    * under the index's own per-table admit watermarks (candidate table
+    * last, so half-admitted units stay invisible to matching) until it
     * lands. A crash at ANY point therefore converges to exactly the
     * first-committed decisions and exactly one admitted copy of their
-    * kept docs — the kept set can never shift on replay, because
-    * nothing ever re-runs `dedupBatch` after an admit.
-    */
-  def corpusDedupSink(idx: graft.dedup.CorpusDedupIndex,
-      decisions: graft.lake.IncrementalTable,
-      maintainEvery: Int = 0): (DataFrame, Long) => Unit = {
-    (batch, batchId) =>
-      val Op = """stream_dedup\[batch=(\d+)\]""".r
-      if (!batch.isEmpty) {
-        // decisions commit FIRST, then admit FROM THE STORED rows: the
-        // decisions table is the single source of truth for the kept
-        // set. The old order (admit, then decisions) had a window —
-        // crash between the two, and the replayed dedupBatch could
-        // re-split a component whose anchor was now indexed, changing
-        // which ids came back kept while the admit watermark refused
-        // to admit the new kept set. Now the kept set is frozen at the
-        // decisions commit; a crash before it replays a deterministic
-        // dedupBatch against an UNCHANGED index, and a crash after it
-        // replays straight to the admit, which reads the frozen rows.
-        val fresh: Option[DataFrame] =
-          if (decisions.latestOpId(Op).exists(batchId <= _)) None
-          else {
-            val d = idx.dedupBatch(batch)
-            val rows = d.withColumn("batch", lit(batchId))
-            decisions.commitFiles(decisions.stage(rows), Set.empty,
-              s"stream_dedup[batch=$batchId]", schema = Some(rows.schema))
-            Some(d)
-          }
-        // admit from the frozen rows: the in-hand frame on the fresh
-        // path (CorpusDedupIndex.dedupBatch localCheckpoints, so it IS
-        // what was just committed — no re-scan of the growing decisions
-        // table per batch), the stored rows only on the replay path
-        val frozen = fresh.getOrElse(decisions.snapshot()
-          .filter(col("batch") === batchId).drop("batch"))
-        idx.admitIdempotent(batch, frozen, batchId)
-        // per-batch appends accrete a small-file tail on all four
-        // tables; bin-pack it every `maintainEvery` batches. The
-        // compactions commit datachange=false, so downstream CDF
-        // consumers of the decisions table cross them untouched, and a
-        // crash between them just leaves work for the next cadence hit
-        // (compactSmall is content-preserving and re-runnable).
-        if (maintainEvery > 0 && batchId > 0 && batchId % maintainEvery == 0)
-          Seq(idx.bandsTable, idx.sizesTable, idx.shinglesTable, decisions)
-            .foreach(_.compactSmall())
-      }
-  }
-
-  /** Exactly-once STREAMING semantic dedup — [[corpusDedupSink]]'s
-    * decisions-first protocol over [[graft.sim.SemDedupIndex]]: each
-    * micro-batch of embedding rows is assigned against the STORED
-    * centroids, near-deduped within (cluster ∩ bucket) against the
-    * persisted corpus, its kept vectors admitted, and its per-vector
-    * decisions appended to `decisions` — the continuous-ingest form of
-    * the `semantic_dedup_incremental` batch arc, completing the sink
-    * family (text MinHash, 64/256-bit fingerprints, unit signatures,
-    * and now embeddings all stream through the same protocol). The
-    * decisions commit freezes the kept set under a
-    * `stream_semdedup[batch=N]` watermark; the admit replays FROM the
-    * stored rows, so a crash anywhere replays to exactly-once index
-    * contents (the [[corpusDedupSink]] argument, buckets-last admit
-    * ordering included). Per-vector decisions carry no clip-atomicity
-    * hazard. `maintainEvery` bin-packs the vecs/buckets/decisions
-    * small-file tails on a cadence (datachange=false commits).
-    */
-  def semanticDedupSink(idx: graft.sim.SemDedupIndex,
-      decisions: graft.lake.IncrementalTable,
-      maintainEvery: Int = 0): (DataFrame, Long) => Unit = {
-    (batch, batchId) =>
-      val Op = """stream_semdedup\[batch=(\d+)\]""".r
-      if (!batch.isEmpty) {
-        val fresh: Option[DataFrame] =
-          if (decisions.latestOpId(Op).exists(batchId <= _)) None
-          else {
-            val d = idx.dedupBatch(batch)
-            val rows = d.withColumn("batch", lit(batchId))
-            decisions.commitFiles(decisions.stage(rows), Set.empty,
-              s"stream_semdedup[batch=$batchId]", schema = Some(rows.schema))
-            Some(d)
-          }
-        val frozen = fresh.getOrElse(decisions.snapshot()
-          .filter(col("batch") === batchId).drop("batch"))
-        idx.admitIdempotent(batch, frozen, batchId)
-        if (maintainEvery > 0 && batchId > 0 && batchId % maintainEvery == 0)
-          Seq(idx.vecsTable, idx.bucketsTable, decisions)
-            .foreach(_.compactSmall())
-      }
-  }
-
-  /** Exactly-once STREAMING media dedup — [[corpusDedupSink]]'s shape
-    * over the single-table [[graft.dedup.FingerprintDedupIndex]]: each
-    * micro-batch of fingerprints `(id, h_hi, h_lo)` is deduped against
-    * the persisted index, its kept fingerprints admitted, and its
-    * per-id decisions appended to `decisions` — the continuous-ingest
-    * form of the `media_dedup_incremental` batch arc. Same
-    * decisions-first protocol as [[corpusDedupSink]] (the decisions
-    * commit freezes the kept set; the admit replays from the stored
-    * rows), with one FEWER failure window: the index is one table, so
-    * there is no half-admitted interleaving at all. Takes any
-    * [[graft.dedup.FingerprintIndexLike]], so the SAME sink serves the
-    * 64-bit halves index, the 256-bit limb index, and the unit-
-    * signature index.
+    * kept units — the kept set can never shift on replay, because
+    * nothing ever re-runs `dedupBatch` after an admit. (Admitting
+    * first would leave a window: a crash between the two, and the
+    * replayed dedupBatch could re-split a component whose anchor is now
+    * indexed, while the admit watermark refuses the new kept set.)
     *
-    * CLIP-ATOMICITY contract for [[graft.dedup.SignatureDedupIndex]]:
-    * that index decides PER CLIP from a batch of per-UNIT rows, so a
-    * clip whose units straddle a micro-batch boundary would be judged
-    * fragment by fragment — each fragment can fall under `minMatched`
-    * and be kept, and the clip accretes conflicting decision rows
-    * across batches. The stream feeding this sink must therefore emit
-    * every clip's unit rows inside ONE micro-batch (natural when the
-    * source row IS a clip and units explode inside the batch — the
-    * [[graft.multimodal.VideoDedup.frameHashDf]] shape; if units
-    * arrive pre-exploded, aggregate them to clips upstream, e.g. a
-    * `groupByKey(clipId).flatMapGroups` stage or a per-clip
-    * watermarked window, before the sink). The fingerprint indexes
-    * (64/256-bit) decide per ROW and carry no such requirement.
-    *
-    * The contract is ENFORCED, not just documented: when
-    * `idx.decidesPerClip`, a fresh batch whose clip ids already carry
-    * a decision from a PRIOR batch fails loudly (naming the clips)
-    * before any decision or admit lands — a mis-shaped stream cannot
-    * silently fragment a clip's decision. The guard is one pruned
-    * probe of the decisions table against the batch's broadcast clip
-    * ids (O(batch) + touched files; a replayed batch skips it on the
+    * CLIP ATOMICITY: an index that decides per clip from unit rows
+    * (`idx.decidesPerClip`, [[graft.dedup.SignatureDedupIndex]]) would
+    * judge a clip whose units straddle a micro-batch boundary fragment
+    * by fragment, each fragment falling under `minMatched` and the clip
+    * accreting conflicting decision rows. The stream must emit every
+    * clip's unit rows inside ONE micro-batch (natural when the source
+    * row IS a clip and units explode inside the batch, the
+    * [[graft.multimodal.VideoDedup.frameHashDf]] shape; otherwise
+    * aggregate units to clips upstream). The sink ENFORCES it: a fresh
+    * batch whose clip ids already carry a decision from a PRIOR batch
+    * fails loudly, naming the clips, before any decision or admit
+    * lands — one pruned probe of the decisions table against the
+    * batch's broadcast clip ids (a replayed batch skips it on the
     * watermark, since its own ids are legitimately present).
+    *
+    * `maintainEvery` bin-packs the small-file tails of every index
+    * table and of `decisions` every N batches. The compactions commit
+    * datachange=false, so CDF consumers of the decisions table cross
+    * them untouched, and a crash between them just leaves work for the
+    * next cadence hit (compactSmall is content-preserving).
     */
-  def mediaDedupSink(idx: graft.dedup.FingerprintIndexLike,
+  def dedupSink(idx: graft.dedup.DedupIndex,
       decisions: graft.lake.IncrementalTable,
       maintainEvery: Int = 0): (DataFrame, Long) => Unit = {
+    val Op = s"""${idx.streamTag}\\[batch=(\\d+)\\]""".r
     (batch, batchId) =>
-      val Op = """stream_fp_dedup\[batch=(\d+)\]""".r
       if (!batch.isEmpty) {
         val fresh: Option[DataFrame] =
           if (decisions.latestOpId(Op).exists(batchId <= _)) None
           else {
-            if (idx.decidesPerClip && decisions.exists &&
-                decisions.latestVersion.isDefined) {
-              val ic = idx.decisionIdCol
-              val ids = batch.select(col(ic)).distinct()
-                .limit(graft.dedup.CorpusDedupIndex.MaxKeysInPredicate + 1)
-                .localCheckpoint()
-              val idVals = ids.collect().map(_.get(0)).toSeq
-              val prior =
-                (if (idVals.size <= graft.dedup.CorpusDedupIndex.MaxKeysInPredicate)
-                  decisions.scan(col(ic).isInCollection(idVals))
-                else decisions.snapshot())
-                  .filter(col("batch") < batchId)
-                  .join(broadcast(batch.select(col(ic)).distinct()), Seq(ic),
-                    "left_semi")
-                  .limit(5).collect().map(_.get(0))
+            if (idx.decidesPerClip && decisions.exists) {
+              val ic = idx.idCol
+              val ids = batch.select(col(ic))
+              val prior = graft.dedup.DedupIndex.prunedScan(decisions, ic,
+                  graft.dedup.DedupIndex.sampleKeys(ids))
+                .filter(col("batch") < batchId)
+                .join(broadcast(ids.distinct()), Seq(ic), "left_semi")
+                .limit(5).collect().map(_.get(0))
               require(prior.isEmpty,
-                s"mediaDedupSink[batch=$batchId]: clip(s) " +
+                s"dedupSink[batch=$batchId]: clip(s) " +
                   s"${prior.mkString(", ")} already decided in a prior " +
                   "batch — this index decides per clip, so every clip's " +
                   "unit rows must arrive inside ONE micro-batch " +
@@ -271,18 +166,19 @@ object Streams {
             val d = idx.dedupBatch(batch)
             val rows = d.withColumn("batch", lit(batchId))
             decisions.commitFiles(decisions.stage(rows), Set.empty,
-              s"stream_fp_dedup[batch=$batchId]", schema = Some(rows.schema))
+              s"${idx.streamTag}[batch=$batchId]", schema = Some(rows.schema))
             Some(d)
           }
-        // admit from the frozen rows: every index's dedupBatch returns
-        // materialized decisions (a localCheckpoint, or a local
-        // relation for a small batch FingerprintDedupIndex decided on
-        // the driver), so the in-hand frame IS what was just committed
+        // admit from the frozen rows: every dedupBatch returns
+        // materialized decisions (a localCheckpoint, or a local relation
+        // for a small batch decided on the driver), so the in-hand frame
+        // IS what was just committed — no re-scan of the growing
+        // decisions table per batch; the stored rows only on replay
         val frozen = fresh.getOrElse(decisions.snapshot()
           .filter(col("batch") === batchId).drop("batch"))
         idx.admitIdempotent(batch, frozen, batchId)
         if (maintainEvery > 0 && batchId > 0 && batchId % maintainEvery == 0)
-          Seq(idx.fpTable, decisions).foreach(_.compactSmall())
+          (idx.indexTables.map(_._1) :+ decisions).foreach(_.compactSmall())
       }
   }
 

@@ -123,14 +123,6 @@ class CorpusDedupIndexSpec extends AnyFunSuite with SparkSpec {
     assert(d === Map(10L -> "kept", 11L -> "kept"))
   }
 
-  test("dedupBatch refuses an un-bootstrapped index") {
-    val idx = freshIndex()
-    val e = intercept[IllegalArgumentException] {
-      idx.dedupBatch(docs(1L -> baseText)).collect()
-    }
-    assert(e.getMessage.contains("not bootstrapped"))
-  }
-
   test("id-clustered index files prune: a candidate-id scan skips files") {
     val idx = freshIndex()
     idx.bootstrap(docs(1L -> baseText, 2L -> otherText))
@@ -156,7 +148,7 @@ class CorpusDedupIndexSpec extends AnyFunSuite with SparkSpec {
     idx.bootstrap(docs(1L -> baseText))
     val decDir = Files.createTempDirectory("cdi_dec_").toString + "/d"
     val dec = new IncrementalTable(spark, decDir)
-    val sink = graft.streaming.Streams.corpusDedupSink(idx, dec)
+    val sink = graft.streaming.Streams.dedupSink(idx, dec)
 
     sink(docs(10L -> otherText), 0L) // kept + admitted
     sink(docs(20L -> otherNear), 1L) // dup of the admitted 10
@@ -180,7 +172,7 @@ class CorpusDedupIndexSpec extends AnyFunSuite with SparkSpec {
     idx.bootstrap(docs(1L -> baseText))
     val dec = new IncrementalTable(spark,
       Files.createTempDirectory("cdi_dec_").toString + "/d")
-    val sink = graft.streaming.Streams.corpusDedupSink(idx, dec,
+    val sink = graft.streaming.Streams.dedupSink(idx, dec,
       maintainEvery = 2)
     val texts = Seq(otherText,
       "totally different words about sailing boats harbors anchors tides winds currents maps",
@@ -234,7 +226,7 @@ class CorpusDedupIndexSpec extends AnyFunSuite with SparkSpec {
     idx.bootstrap(docs(1L -> baseText))
     val dec = new IncrementalTable(spark,
       Files.createTempDirectory("cdi_dec_").toString + "/d")
-    val sink = graft.streaming.Streams.corpusDedupSink(idx, dec)
+    val sink = graft.streaming.Streams.dedupSink(idx, dec)
     val b = docs(10L -> otherText, 11L -> otherNear)
 
     // crash window: the admit landed, the decisions commit did not

@@ -101,7 +101,7 @@ class FingerprintDedupIndex256Spec extends AnyFunSuite with SparkSpec {
     idx.bootstrap(fps((1L, fp(1))))
     val dec = new IncrementalTable(spark,
       Files.createTempDirectory("fpi256_dec_").toString + "/d")
-    val sink = graft.streaming.Streams.mediaDedupSink(idx, dec)
+    val sink = graft.streaming.Streams.dedupSink(idx, dec)
     sink(fps((10L, fp(5))), 0L) // kept + admitted
     sink(fps((20L, near(fp(5), 5))), 1L) // dup of the ADMITTED 10
     val rows = dec.snapshot().select("doc_id", "status", "batch").collect()

@@ -76,6 +76,17 @@ class FingerprintDedupIndexSpec extends AnyFunSuite with SparkSpec {
       got(1009L + 2 * k) == "dup_batch"))
   }
 
+  test("bootstrap and admit of the 48-row shape run 3 and 4 Spark jobs") {
+    val rnd = new scala.util.Random(48)
+    def fp(): (Long, Long) = (rnd.nextLong() >>> 32, rnd.nextLong() >>> 32)
+    val corpus = fps((0L until 500L).map { i => val (h, l) = fp(); (i, h, l) }: _*)
+    val batch = fps((1000L until 1048L).map { i => val (h, l) = fp(); (i, h, l) }: _*)
+    val idx = freshIndex()
+    assert(jobsDuring(idx.bootstrap(corpus)) === 3)
+    val d = idx.dedupBatch(batch)
+    assert(jobsDuring(idx.admit(batch, d)) === 4)
+  }
+
   test("admit grows the index: batch 2 dups against batch 1's kept; " +
     "batch-1 dups are NOT anchors") {
     val idx = freshIndex()
@@ -106,22 +117,6 @@ class FingerprintDedupIndexSpec extends AnyFunSuite with SparkSpec {
     assert(d === Map(30L -> "kept", 31L -> "dup_batch", 32L -> "dup_batch"))
   }
 
-  test("idempotent admit: a replayed batch neither re-commits nor " +
-    "flags itself dup_corpus on re-dedup") {
-    val idx = freshIndex()
-    idx.bootstrap(fps((1L, A._1, A._2)))
-    val b1 = fps((10L, B._1, B._2))
-    val d1 = idx.dedupBatch(b1).localCheckpoint()
-    idx.admitIdempotent(b1, d1, batchId = 1L)
-    val vAfter = idx.fpTable.latestVersion.get
-    // replay: the watermark short-circuits the commit
-    idx.admitIdempotent(b1, d1, batchId = 1L)
-    assert(idx.fpTable.latestVersion.get === vAfter, "replayed admit committed")
-    // and re-running dedupBatch on the already-admitted batch does not
-    // see itself as a corpus dup (the self-match guard)
-    assert(decisionMap(idx.dedupBatch(b1))(10L) === "kept")
-  }
-
   test("streaming sink: decisions accumulate, replay no-ops on both " +
     "tables, maintenance cadence packs the tail") {
     import graft.lake.IncrementalTable
@@ -129,7 +124,7 @@ class FingerprintDedupIndexSpec extends AnyFunSuite with SparkSpec {
     idx.bootstrap(fps((1L, A._1, A._2)))
     val dec = new IncrementalTable(spark,
       Files.createTempDirectory("fpi_dec_").toString + "/d")
-    val sink = graft.streaming.Streams.mediaDedupSink(idx, dec,
+    val sink = graft.streaming.Streams.dedupSink(idx, dec,
       maintainEvery = 2)
     sink(fps((10L, B._1, B._2)), 0L) // kept + admitted
     sink(fps((20L, near(B, 1L)._1, near(B, 1L)._2)), 1L) // dup of 10
@@ -156,25 +151,6 @@ class FingerprintDedupIndexSpec extends AnyFunSuite with SparkSpec {
       fps((99L, near(B, 2L)._1, near(B, 2L)._2))))(99L) === "dup_corpus")
   }
 
-  test("half-bootstrapped index (config committed, crash before data) " +
-    "is NOT 'exists'; re-running bootstrap completes it") {
-    val base = Files.createTempDirectory("fpi_half_").toString + "/idx"
-    val idx = new FingerprintDedupIndex(spark, base, "doc_id",
-      maxHamming = 3, bandBits = 16)
-    // simulate the crash window: the write-order config landed
-    // (version 0), the data append did not
-    idx.fpTable.setWriteOrder("band", "bv")
-    assert(!idx.exists,
-      "a config-only table must not count as bootstrapped — dedupBatch " +
-        "against it would silently return zero corpus recall forever")
-    intercept[IllegalArgumentException](
-      idx.dedupBatch(fps((9L, A._1, A._2))))
-    idx.bootstrap(fps((1L, A._1, A._2))) // resume completes
-    assert(idx.exists)
-    assert(decisionMap(idx.dedupBatch(
-      fps((9L, near(A, 1L)._1, near(A, 1L)._2))))(9L) === "dup_corpus")
-  }
-
   test("sink crash between the decisions commit and the admit: replay " +
     "admits exactly the FROZEN kept set (a chain component cannot " +
     "re-split into a different kept set)") {
@@ -198,7 +174,7 @@ class FingerprintDedupIndexSpec extends AnyFunSuite with SparkSpec {
     val idxVBefore = idx.fpTable.latestVersion.get
     // the replayed micro-batch: skips the dedup (decisions watermark),
     // admits from the STORED rows
-    graft.streaming.Streams.mediaDedupSink(idx, dec)(batch, 5L)
+    graft.streaming.Streams.dedupSink(idx, dec)(batch, 5L)
     assert(idx.fpTable.latestVersion.get > idxVBefore, "admit must land")
     val indexed = idx.fpTable.snapshot().select("doc_id").distinct()
       .collect().map(_.getLong(0)).toSet
@@ -206,7 +182,7 @@ class FingerprintDedupIndexSpec extends AnyFunSuite with SparkSpec {
       "exactly the frozen kept set joins the index — not a re-split one")
     // decisions unchanged, and a second full replay no-ops everywhere
     val decV = dec.latestVersion.get
-    graft.streaming.Streams.mediaDedupSink(idx, dec)(batch, 5L)
+    graft.streaming.Streams.dedupSink(idx, dec)(batch, 5L)
     assert(dec.latestVersion.get === decV)
     assert(idx.fpTable.snapshot().select("doc_id").distinct().count() === 2L)
   }

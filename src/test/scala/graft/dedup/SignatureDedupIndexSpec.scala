@@ -71,7 +71,7 @@ class SignatureDedupIndexSpec extends AnyFunSuite with SparkSpec {
     idx.bootstrap(clip(1L, Seq(101, 102, 103)))
     val dec = new IncrementalTable(spark,
       Files.createTempDirectory("sigidx_dec_").toString + "/d")
-    val sink = graft.streaming.Streams.mediaDedupSink(idx, dec)
+    val sink = graft.streaming.Streams.dedupSink(idx, dec)
     sink(clip(10L, Seq(401, 402, 403)), 0L) // kept + admitted
     sink(clip(20L, Seq(402, 403), at = 9L), 1L) // trimmed copy of 10
     val rows = dec.snapshot().select("doc_id", "status", "batch").collect()
@@ -95,7 +95,7 @@ class SignatureDedupIndexSpec extends AnyFunSuite with SparkSpec {
     idx.bootstrap(clip(1L, Seq(101, 102, 103)))
     val dec = new IncrementalTable(spark,
       Files.createTempDirectory("sigidx_atom_").toString + "/d")
-    val sink = graft.streaming.Streams.mediaDedupSink(idx, dec)
+    val sink = graft.streaming.Streams.dedupSink(idx, dec)
     // batch 0: clip 40's FIRST fragment (2 of its 4 units) — decided
     sink(clip(40L, Seq(501, 502)), 0L)
     val decV = dec.latestVersion.get

@@ -119,40 +119,6 @@ class SemDedupIndexSpec extends AnyFunSuite with SparkSpec {
     assert(r32.getLong(1) === rows(30L)._1, "32 must land in 30's cluster")
   }
 
-  test("TAKEDOWN: remove() retracts a vector; its near-dups stop being " +
-    "rejected (no ghost anchors); re-removal no-ops") {
-    val idx = freshIndex()
-    idx.bootstrap(emb(bootRows: _*))
-    assert(decisionMap(idx.dedupBatch(
-      emb(40L -> v(0, 0.999f, 1, 0.01f))))(40L) === "dup_corpus")
-
-    idx.remove(Seq(0L, 1L, 2L, 3L))
-    assert(idx.vecsTable.snapshot().filter(col("vec_id") <= 3L).count() === 0L)
-    assert(idx.bucketsTable.snapshot().filter(col("vec_id") <= 3L).count() === 0L)
-    assert(decisionMap(idx.dedupBatch(
-      emb(41L -> v(0, 0.999f, 1, 0.01f))))(41L) === "kept")
-    idx.remove(Seq(0L)) // idempotent
-    assert(decisionMap(idx.dedupBatch(
-      emb(42L -> v(0, 0.998f, 1, 0.02f))))(42L) === "kept")
-  }
-
-  test("admitIdempotent: a replayed batch id leaves the index unchanged") {
-    val idx = freshIndex()
-    idx.bootstrap(emb(bootRows: _*))
-    val b = emb(50L -> v(0, 0.5f, 1, 0.5f))
-    val d = idx.dedupBatch(b).localCheckpoint()
-    idx.admitIdempotent(b, d, batchId = 1L)
-    val vecsAfter = idx.vecsTable.snapshot().count()
-    val bucketsAfter = idx.bucketsTable.snapshot().count()
-    idx.admitIdempotent(b, d, batchId = 1L) // replay — must skip
-    assert(idx.vecsTable.snapshot().count() === vecsAfter)
-    assert(idx.bucketsTable.snapshot().count() === bucketsAfter)
-    idx.admitIdempotent(emb(51L -> v(2, 0.5f, 3, 0.5f)),
-      idx.dedupBatch(emb(51L -> v(2, 0.5f, 3, 0.5f))).localCheckpoint(),
-      batchId = 2L) // a NEW id commits
-    assert(idx.vecsTable.snapshot().count() === vecsAfter + 1)
-  }
-
   test("drift: in-distribution growth holds ratio ≈ 1; a shifted batch " +
     "pulls it down") {
     val idx = freshIndex()
@@ -181,7 +147,7 @@ class SemDedupIndexSpec extends AnyFunSuite with SparkSpec {
     idx.bootstrap(emb(bootRows: _*))
     val dec = new IncrementalTable(spark,
       Files.createTempDirectory("sdi_dec_").toString + "/d")
-    val sink = graft.streaming.Streams.semanticDedupSink(idx, dec)
+    val sink = graft.streaming.Streams.dedupSink(idx, dec)
     sink(emb(80L -> v(2, 0.7f, 3, 0.7f)), 0L) // kept + admitted
     sink(emb(81L -> v(2, 0.69f, 3, 0.71f)), 1L) // near-dup of batch-0 kept
     val rows = dec.snapshot().select("vec_id", "status", "batch").collect()
